@@ -980,15 +980,16 @@ def snap_ann_index_update(
     assignment pass over that day's files; everything else is
     manifest arithmetic."""
     from steaminganalysis_spark.operators.storage import (
+        SnapCommitConflict,
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_versions,
         snap_read_incremental,
     )
 
     corpus_latest = max(_snap_versions(corpus_table))
-    iv, idoc = _snap_latest_doc(index_table)
+    iv, idoc = _snap_manifest(index_table)
     covered = idoc["covers_corpus_version"]
     if corpus_latest == covered:
         return {
@@ -1022,7 +1023,7 @@ def snap_ann_index_update(
     assigned = _frozen_assign(spark, index_dir, delta)
     shards = _snap_add_files(assigned.coalesce(1), index_table, "annix_shard")
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(index_table)
+        v, doc = _snap_manifest(index_table)
         if doc["covers_corpus_version"] >= corpus_latest:
             return {  # a concurrent updater already covered it
                 "strategy": "lost-race",
@@ -1031,19 +1032,22 @@ def snap_ann_index_update(
                 "delta_files": touched,
                 "index_version": v,
             }
-        if _snap_commit_cas(
-            index_table,
-            doc["files"] + shards,
-            v + 1,
-            extra={"covers_corpus_version": corpus_latest},
-        ):
-            return {
-                "strategy": strategy,
-                "from": covered,
-                "to": corpus_latest,
-                "delta_files": touched,
-                "index_version": v + 1,
-            }
+        try:
+            _snap_commit(
+                index_table,
+                doc["files"] + shards,
+                v + 1,
+                covers_corpus_version=corpus_latest,
+            )
+        except SnapCommitConflict:
+            continue
+        return {
+            "strategy": strategy,
+            "from": covered,
+            "to": corpus_latest,
+            "delta_files": touched,
+            "index_version": v + 1,
+        }
     raise RuntimeError(f"index update lost {max_retries} races")
 
 
@@ -1086,8 +1090,8 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_read,
         snap_append_optimistic,
     )
@@ -1101,7 +1105,7 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _emb_double(spark, sf_dir)
     initial = base.filter(F.col("vec_id") % 4 < 2)
     f0 = _snap_add_files(initial.repartition(2), corpus_table, "cx0")
-    _snap_commit_cas(corpus_table, f0, 0)
+    _snap_commit(corpus_table, f0, 0)
 
     # frozen FIXED-POINT quantizer trained on the committed v0 read:
     # integer centroids persist as the model, so every later
@@ -1114,7 +1118,7 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seed = _frozen_assign(spark, index_dir, _snap_read(spark, corpus_table, 0))
     s0 = _snap_add_files(seed.coalesce(1), index_table, "ix0")
-    _snap_commit_cas(index_table, s0, 0, extra={"covers_corpus_version": 0})
+    _snap_commit(index_table, s0, 0, covers_corpus_version=0)
 
     # corpus append -> incremental index update
     fd = _snap_add_files(
@@ -1147,7 +1151,7 @@ def table_ann_index_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ix.count() != full.count() or ix.exceptAll(full).count() != 0:
         raise RuntimeError("incremental index diverged from full rebuild")
 
-    _, idoc = _snap_latest_doc(index_table)
+    _, idoc = _snap_manifest(index_table)
     if idoc["covers_corpus_version"] != 1:
         raise RuntimeError("index manifest marker did not advance")
 

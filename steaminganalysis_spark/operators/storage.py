@@ -16,7 +16,10 @@ few directories.
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -949,46 +952,79 @@ def cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------- manifest snapshots / time travel (r11)
 
 
-def _snap_commit(
-    table: str,
-    files: list[str],
-    version: int,
-    stats: dict | None = None,
-    txn: dict | None = None,
-) -> None:
-    """Atomic manifest commit: write the complete file list to a temp
-    path, fsync, then os.replace to manifests/v{N}.json — readers
-    either see the whole snapshot or the previous one, never a torn
-    list. This is the Iceberg/Delta commit primitive reduced to its
-    load-bearing core (one atomic rename of a self-contained
-    manifest). ``txn`` is the Delta txn appId→version pattern: a
-    {writer_marker: last_batch_id} map riding the manifest so a
-    streaming sink that crashed AFTER the commit but BEFORE its
-    external watermark advance can detect its own committed batch on
-    replay (see snapshot_ingest_sink)."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    doc: dict = {"version": version, "files": sorted(files)}
-    if stats is not None:
-        doc["stats"] = stats
-    if txn is not None:
-        doc["txn"] = txn
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
+def _write_durable(path: str, data: str | bytes, exclusive: bool) -> bool:
+    """The table format's one durable write. ``data`` goes to a
+    uuid-named temp file beside ``path`` (two writers of the same
+    target never share a temp), is fsynced, then published atomically:
+    ``os.link`` when ``exclusive`` — link(2) fails with EEXIST if
+    ``path`` exists, so exactly one of two racing writers wins and the
+    loser publishes nothing — and ``os.replace`` (last writer wins)
+    otherwise. Readers see the whole file or none of it. Returns True
+    iff ``path`` now holds ``data``."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.inprogress")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as f:
+        f.write(data)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    if not exclusive:
+        os.replace(tmp, path)
+        return True
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+
+
+class SnapCommitConflict(RuntimeError):
+    """A manifest commit lost its compare-and-swap: the version it
+    targeted was already committed by another writer."""
+
+
+def _snap_commit(table: str, files: list[str], version: int, **fields) -> None:
+    """The table format's single commit: compare-and-swap
+    manifests/v{N}.json = {version, files, **fields} through
+    ``_write_durable(exclusive=True)`` — readers either see the whole
+    snapshot or the previous one, and of two racing committers exactly
+    one wins. The loser gets ``SnapCommitConflict`` (never a silent
+    no-op): optimistic retry loops catch it and rebase, every other
+    caller fails loudly. ``fields`` are the manifest's metadata
+    families (stats, txn, dv, dvb, schema, partitions, ndv, bloom,
+    nulls, commit_ts, ...); a None value is omitted, so ``doc.get(key)``
+    carries an absent family forward as absent. ``txn`` is the Delta
+    txn appId→version pattern: a {writer_marker: last_batch_id} map
+    riding the manifest so a streaming sink that crashed AFTER the
+    commit but BEFORE its external watermark advance can detect its
+    own committed batch on replay (see snapshot_ingest_sink)."""
+    doc = {k: val for k, val in fields.items() if val is not None}
+    doc.update(version=version, files=sorted(files))
+    path = os.path.join(table, "manifests", f"v{version}.json")
+    if not _write_durable(path, json.dumps(doc), exclusive=True):
+        raise SnapCommitConflict(f"{table}: snapshot v{version} is already committed")
+
+
+def _snap_carry(doc: dict) -> dict:
+    """A successor's carried metadata: every family of ``doc`` except
+    the commit-scoped keys. ``commit_ts`` is never carried (ADVICE
+    r15): copying the predecessor's timestamp into a successor that
+    contains NEW data would make snap_resolve_as_of(ts) return rows
+    committed AFTER ts."""
+    return {
+        k: val for k, val in doc.items() if k not in ("version", "files", "commit_ts")
+    }
 
 
 def _snap_versions(table: str) -> dict[int, str]:
-    """Committed manifest versions -> file name. In-progress manifests
-    (dot-prefixed temp names) never match the committed pattern."""
-    import re
-
+    """Committed manifest versions -> file name ({} before the first
+    commit). In-progress manifests (dot-prefixed temp names) never
+    match the committed pattern."""
     mdir = os.path.join(table, "manifests")
+    if not os.path.isdir(mdir):
+        return {}
     return {
         int(m.group(1)): f
         for f in os.listdir(mdir)
@@ -997,50 +1033,34 @@ def _snap_versions(table: str) -> dict[int, str]:
     }
 
 
-def _snap_latest(table: str) -> tuple[int, list[str]]:
-    """(latest committed version, its file list) — the lookup writers
-    use to build the successor manifest. Decouples manifest versions
-    from any external counter (e.g. a streaming sink's batch id, which
-    restarts at 0 on a fresh checkpoint against an old table)."""
-    import json
-
+def _snap_manifest(table: str, version: int | None = None) -> tuple[int, dict]:
+    """The table format's single snapshot resolver: (version, manifest
+    doc) for ``version``, default the latest committed one. An
+    uncommitted version raises ValueError — every versioned reader
+    inherits the same contract. Manifest keys absent from older
+    commits read as missing (``doc.get``), never as errors."""
     committed = _snap_versions(table)
-    v = max(committed)
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
+    if not committed:
+        raise ValueError(f"{table}: no snapshot is committed")
+    v = max(committed) if version is None else version
+    if v not in committed:
+        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
+    with open(os.path.join(table, "manifests", committed[v])) as f:
+        return v, json.load(f)
+
+
+def _snap_frame(
+    spark: SparkSession, table: str, doc: dict, files: list[str] | None = None
+) -> DataFrame:
+    """Files -> frame for a resolved manifest: reads ``files`` (default
+    every file ``doc`` lists). An empty plan (a pruned read that kept
+    nothing) is an empty frame with the table's columns — the schema
+    comes from one listed file's footer, no row is scanned."""
+    files = doc["files"] if files is None else files
+    df = spark.read.parquet(
+        *[os.path.join(table, "data", f) for f in (files or doc["files"][:1])]
     )
-    return v, manifest["files"]
-
-
-def _snap_latest_doc(table: str) -> tuple[int, dict]:
-    """(latest committed version, FULL manifest doc) — the lookup for
-    writers that need more than the file list: the ``txn`` marker map
-    (idempotent streaming commits) and/or the ``stats`` bounds. Keys
-    absent from older manifests read as missing, never as errors."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed)
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    return v, doc
-
-
-def _snap_latest_with_stats(table: str) -> tuple[int, list[str], dict]:
-    """(latest committed version, file list, per-file stats dict) —
-    the lookup stats-aware writers (CDC merge) use: classification by
-    manifest stats needs the bounds alongside the names, and the
-    successor commit must CARRY surviving files' stats forward or
-    pruning degrades to full rewrites after one commit."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed)
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    return v, manifest["files"], manifest.get("stats", {})
+    return df if files else df.filter(F.lit(False))
 
 
 def _snap_read(spark: SparkSession, table: str, version: int | None = None):
@@ -1048,17 +1068,7 @@ def _snap_read(spark: SparkSession, table: str, version: int | None = None):
     committed). Only files listed in the resolved manifest are read —
     orphan data files (crashed writers) and in-progress manifests are
     invisible by construction."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    paths = [os.path.join(table, "data", f) for f in manifest["files"]]
-    return spark.read.parquet(*paths)
+    return _snap_frame(spark, table, _snap_manifest(table, version)[1])
 
 
 def _snap_add_files(df: DataFrame, table: str, tmp_tag: str) -> list[str]:
@@ -1102,12 +1112,12 @@ def table_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level deletes, q_cluster_incremental the layout; this key is
     the committed-file-list contract itself. Harness: snapshot v0 =
     events with event_id % 10 < 8 (committed via temp-write + fsync +
-    os.replace of manifests/v0.json), v1 = v0's files plus the
-    remaining rows' files (manifests never rewrite data). Two fault
-    injections sit on disk when the reads run: an ORPHAN data file (a
-    crashed writer's duplicate rows, present in data/ but in no
-    manifest) and an IN-PROGRESS manifest (.v2.json.inprogress) — both
-    must be invisible. The registered frame reads v0 (time travel) and
+    os.link of manifests/v0.json), v1 = v0's files plus the remaining
+    rows' files (manifests never rewrite data). Two fault injections
+    sit on disk when the reads run: an ORPHAN data file (a crashed
+    writer's duplicate rows, present in data/ but in no manifest) and
+    an IN-PROGRESS manifest (a crashed committer's temp) — both must
+    be invisible. The registered frame reads v0 (time travel) and
     latest-committed (v1) side by side and aggregates per event type;
     the oracle states both snapshots from the raw table, so a reader
     that ever lists the directory instead of the manifest — the classic
@@ -1140,9 +1150,10 @@ def table_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a crashed writer's leftovers — duplicate rows that would break
     # the counts if a reader listed the directory)
     _snap_add_files(ev.limit(50), table, "snap_orphan")
-    # fault injection 2: a torn (in-progress) manifest
+    # fault injection 2: a torn (in-progress) manifest — the temp a
+    # committer that crashed mid-write leaves behind
     with open(
-        os.path.join(table, "manifests", ".v2.json.inprogress"), "w"
+        os.path.join(table, "manifests", ".v2.json.0badc0de.inprogress"), "w"
     ) as f:
         f.write('{"version": 2, "files": ["garbage')
 
@@ -1172,52 +1183,6 @@ def table_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------- optimistic concurrency / VACUUM / MERGE (r12)
-
-
-def _snap_commit_cas(
-    table: str,
-    files: list[str],
-    version: int,
-    stats: dict | None = None,
-    txn: dict | None = None,
-    dv: dict | None = None,
-    extra: dict | None = None,
-) -> bool:
-    """Compare-and-swap manifest commit — Iceberg's commit-conflict
-    model reduced to its load-bearing core: write the complete file
-    list to a unique temp path (fsync), then ``os.link`` it to
-    manifests/v{N}.json. link(2) FAILS with EEXIST when the version
-    is already taken, atomically — so exactly one of two racing
-    committers wins and the loser learns it lost without ever making
-    a torn or clobbered manifest visible. Returns True iff this
-    committer created v{N}. ``extra`` carries any further manifest
-    keys (ndv, bloom, nulls, refs, ...) a metadata-only successor
-    must preserve or publish; the explicit params win on collision."""
-    import json
-    import uuid as _uuid
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.{_uuid.uuid4().hex[:8]}.inprogress")
-    doc = dict(extra or {})
-    doc.update({"version": version, "files": sorted(files)})
-    if stats is not None:
-        doc["stats"] = stats  # per-file column bounds ride the commit
-    if txn is not None:
-        doc["txn"] = txn  # writer-marker → batch id (idempotent replay)
-    if dv is not None:
-        doc["dv"] = dv  # data file → its equality-delete files (MoR)
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, os.path.join(mdir, f"v{version}.json"))
-        return True
-    except FileExistsError:
-        return False  # lost the race; nothing visible was written
-    finally:
-        os.remove(tmp)
 
 
 def snap_append_optimistic(
@@ -1250,21 +1215,12 @@ def snap_append_optimistic(
     writers that want timestamp reachability use
     snap_commit_ts_append, which stamps a fresh monotonic ts."""
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
-        if _snap_commit_cas(
-            table,
-            doc["files"] + new_files,
-            v + 1,
-            stats=doc.get("stats"),
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-            extra={
-                k: val
-                for k, val in doc.items()
-                if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-            },
-        ):
-            return v + 1
+        v, doc = _snap_manifest(table)
+        try:
+            _snap_commit(table, doc["files"] + new_files, v + 1, **_snap_carry(doc))
+        except SnapCommitConflict:
+            continue
+        return v + 1
     raise RuntimeError(
         f"optimistic append lost {max_retries} consecutive races on {table}"
     )
@@ -1299,7 +1255,6 @@ def snap_expire(
        successor committed after the caller chose ``retain`` is the
        current table, not history.
     """
-    import json
     import time
 
     committed = _snap_versions(table)
@@ -1331,8 +1286,8 @@ def snap_expire(
     # writer committed since the listing above.
     keep_files: set[str] = set()
     keep_refs: set[str] = set()
-    for _v, fname in _snap_versions(table).items():
-        manifest = json.loads(open(os.path.join(table, "manifests", fname)).read())
+    for v in _snap_versions(table):
+        manifest = _snap_manifest(table, v)[1]
         keep_files |= set(manifest["files"])
         # merge-on-read delete files are referenced state too: a DV
         # swept while its manifest lives would resurrect deleted rows
@@ -1431,13 +1386,13 @@ def table_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the race: both writers observe the same latest snapshot and
     # build their successor manifest from it
-    v, prev = _snap_latest(table)
-    won_a = _snap_commit_cas(table, prev + files_a, v + 1)
-    won_b = _snap_commit_cas(table, prev + files_b, v + 1)
-    if not won_a or won_b:
-        raise RuntimeError(
-            f"CAS contract violated: won_a={won_a} won_b={won_b}"
-        )
+    v, prev = _snap_manifest(table)
+    _snap_commit(table, prev["files"] + files_a, v + 1)  # A wins
+    try:
+        _snap_commit(table, prev["files"] + files_b, v + 1)
+        raise RuntimeError("CAS contract violated: stale commit of B won")
+    except SnapCommitConflict:
+        pass  # B lost atomically; nothing visible was written
     v_b = snap_append_optimistic(table, files_b)
     if v_b != 2:
         raise RuntimeError(f"loser retry landed v{v_b}, expected v2")
@@ -1668,8 +1623,7 @@ def table_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "merge_insert",
     )
-    if not _snap_commit_cas(table, untouched + rewritten + inserted, 1):
-        raise RuntimeError("single-writer CAS commit lost a race")
+    _snap_commit(table, untouched + rewritten + inserted, 1)
     dirty = [
         f
         for f in untouched
@@ -1761,63 +1715,6 @@ def _snap_add_files_with_stats(
     return kept, stats
 
 
-def _snap_commit_stats(
-    table: str, files: list[str], version: int, stats: dict
-) -> None:
-    """Manifest commit carrying per-file column stats — same atomic
-    temp+fsync+os.replace protocol; ``files`` stays the plain name
-    list so every existing reader (_snap_read/_snap_latest) keeps
-    working, stats ride under a separate key."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "files": sorted(files), "stats": stats}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
-
-
-def snap_read_pruned(
-    spark: SparkSession,
-    table: str,
-    col: str,
-    lo: int,
-    hi: int,
-    version: int | None = None,
-) -> tuple[DataFrame, list[str], int]:
-    """Stats-pruned snapshot read: plan ONLY files whose manifest
-    [min, max] span for ``col`` intersects [lo, hi]; files with no
-    recorded stats are always kept (pruning must be a SUPERSET of the
-    true match — correctness never depends on stats). Returns
-    (frame, planned file names, total files) so callers can assert
-    skipping actually happened. The frame still needs the row-level
-    predicate applied — stats prune at FILE grain."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    stats = manifest.get("stats", {})
-    planned = [
-        f
-        for f in manifest["files"]
-        if f not in stats
-        or col not in stats[f]
-        or (stats[f][col][0] <= hi and lo <= stats[f][col][1])
-    ]
-    paths = [os.path.join(table, "data", f) for f in planned]
-    return spark.read.parquet(*paths), planned, len(manifest["files"])
-
-
 @query(
     "q_table_pruned_read",
     oracle=f"""
@@ -1868,10 +1765,12 @@ def table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prune_base",
         ["event_id"],
     )
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
     m = int(ev.agg(F.max("event_id")).first()[0])
     lo, hi = m // 2, m * 3 // 4
-    frame, planned, total = snap_read_pruned(spark, table, "event_id", lo, hi)
+    frame, planned, total = snap_read_pruned_multi(
+        spark, table, {"event_id": (lo, hi)}
+    )
     # the pruned plan must be a PROPER subset and EXACTLY the
     # span-intersecting files per the recorded stats
     expected = sorted(
@@ -1908,28 +1807,21 @@ def _parquet_file_schema(path: str) -> dict[str, str]:
     return {f.name: str(f.type) for f in sch}
 
 
-def _snap_commit_schema(
-    table: str,
-    files: list[str],
-    version: int,
-    schema: list[tuple[str, str]],
-    new_files: list[str] | None = None,
-    txn: dict | None = None,
+def _snap_check_schema(
+    table: str, schema: list[tuple[str, str]], new_files: list[str]
 ) -> None:
-    """Manifest commit carrying the TABLE SCHEMA (ordered
-    (column, arrow-type) pairs) — Iceberg's schema-tracking pillar
-    reduced to its core: the schema lives in the manifest, not in the
-    data files, so (a) adding a column is a metadata-only commit (old
-    files are never rewritten — readers NULL-fill), and (b) every
-    appended file is validated against the declared schema AT COMMIT
-    TIME from its footer: unknown columns and type conflicts are
-    rejected BEFORE they become a torn read hours later (the
-    mergeSchema-blowup failure mode). Missing columns are fine —
-    that IS evolution."""
-    import json
-
+    """Commit-time validation for a manifest carrying the TABLE SCHEMA
+    (ordered (column, arrow-type) pairs, committed as ``schema=``) —
+    Iceberg's schema-tracking pillar reduced to its core: the schema
+    lives in the manifest, not in the data files, so (a) adding a
+    column is a metadata-only commit (old files are never rewritten —
+    readers NULL-fill), and (b) every appended file is validated
+    against the declared schema BEFORE the commit from its footer:
+    unknown columns and type conflicts raise ValueError before they
+    become a torn read hours later (the mergeSchema-blowup failure
+    mode). Missing columns are fine — that IS evolution."""
     declared = dict(schema)
-    for n in new_files or []:
+    for n in new_files:
         got = _parquet_file_schema(os.path.join(table, "data", n))
         unknown = sorted(set(got) - set(declared))
         if unknown:
@@ -1944,21 +1836,6 @@ def _snap_commit_schema(
                 f"file {n} type-conflicts with the table schema on: "
                 f"{conflicts} ({[(c, got[c], declared[c]) for c in conflicts]})"
             )
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        doc = {
-            "version": version,
-            "files": sorted(files),
-            "schema": [list(p) for p in schema],
-        }
-        if txn is not None:
-            doc["txn"] = txn  # writer-marker -> batch id (idempotent replay)
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
 
 
 def _snap_read_schema(
@@ -1970,15 +1847,7 @@ def _snap_read_schema(
     files). The projection is the manifest's, never the files' — a
     rogue column in a data file cannot leak into the table surface,
     and a time-travel read serves the OLD schema."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, manifest = _snap_manifest(table, version)
     paths = [os.path.join(table, "data", f) for f in manifest["files"]]
     df = spark.read.option("mergeSchema", "true").parquet(*paths)
     cols = []
@@ -2049,7 +1918,8 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "evo_base",
     )
-    _snap_commit_schema(table, base, 0, schema_v0, new_files=base)
+    _snap_check_schema(table, schema_v0, base)
+    _snap_commit(table, base, 0, schema=schema_v0)
     # metadata-only evolution: schema v1 adds `day`; the delta rows
     # carry it, v0's files are untouched
     schema_v1 = schema_v0 + [("day", "string")]
@@ -2063,7 +1933,8 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "evo_delta",
     )
-    _snap_commit_schema(table, base + delta, 1, schema_v1, new_files=delta)
+    _snap_check_schema(table, schema_v1, delta)
+    _snap_commit(table, base + delta, 1, schema=schema_v1)
     # fault injections: both must REJECT at commit time, from footers
     rogue = _snap_add_files(
         ev.limit(10).select(
@@ -2074,9 +1945,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "evo_rogue",
     )
     try:
-        _snap_commit_schema(
-            table, base + delta + rogue, 2, schema_v1, new_files=rogue
-        )
+        _snap_check_schema(table, schema_v1, rogue)
         raise RuntimeError("undeclared-column file was accepted")
     except ValueError:
         pass  # rejected at commit; the rogue file stays an orphan
@@ -2089,9 +1958,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "evo_badtype",
     )
     try:
-        _snap_commit_schema(
-            table, base + delta + badtype, 2, schema_v1, new_files=badtype
-        )
+        _snap_check_schema(table, schema_v1, badtype)
         raise RuntimeError("type-conflicting file was accepted")
     except ValueError:
         pass
@@ -2169,51 +2036,6 @@ def _snap_add_files_partitioned(
     return names, partitions
 
 
-def _snap_commit_partitioned(
-    table: str,
-    files: list[str],
-    version: int,
-    spec: list[str],
-    partitions: dict,
-    txn: dict | None = None,
-    stats: dict | None = None,
-    transforms: dict | None = None,
-) -> None:
-    """Manifest commit carrying the partition SPEC (ordered partition
-    columns) and per-file partition tuples — same atomic
-    temp+fsync+os.replace protocol; ``files`` stays the plain name
-    list so every existing reader keeps working. Carried-forward
-    files keep whatever tuple (possibly from an OLDER spec) they were
-    committed under: spec evolution is metadata-only and never
-    rewrites or re-tags existing files (the Iceberg spec-evolution
-    contract). ``transforms`` (r14) records HIDDEN-partitioning
-    derivations {partition_field: {"kind", "source", "arg"}} so the
-    planner can convert source-column predicates to partition values
-    itself — queries never mention the partition fields."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        doc = {
-            "version": version,
-            "files": sorted(files),
-            "spec": list(spec),
-            "partitions": partitions,
-        }
-        if transforms is not None:
-            doc["transforms"] = transforms
-        if txn is not None:
-            doc["txn"] = txn  # writer-marker -> batch id (idempotent replay)
-        if stats is not None:
-            doc["stats"] = stats  # per-file column bounds (two-level skip)
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
-
-
 def snap_read_partition_pruned(
     spark: SparkSession,
     table: str,
@@ -2233,16 +2055,9 @@ def snap_read_partition_pruned(
     per distinct planned tuple unioned by name, and a file missing a
     newer partition column still serves it from its DATA columns when
     present. Returns (frame, planned names, total files)."""
-    import json
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, manifest = _snap_manifest(table, version)
     parts = manifest.get("partitions", {})
     planned = [
         f
@@ -2333,7 +2148,7 @@ def table_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, base_parts = _snap_add_files_partitioned(
         ev.filter(F.expr("event_id % 10 < 8")), table, "part_base", ["day"]
     )
-    _snap_commit_partitioned(table, base, 0, ["day"], base_parts)
+    _snap_commit(table, base, 0, spec=["day"], partitions=base_parts)
     # v1: spec EVOLVES to [day, event_type]; v0 tuples carried as-is
     delta, delta_parts = _snap_add_files_partitioned(
         ev.filter(F.expr("event_id % 10 >= 8")),
@@ -2341,12 +2156,12 @@ def table_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part_delta",
         ["day", "event_type"],
     )
-    _snap_commit_partitioned(
+    _snap_commit(
         table,
         base + delta,
         1,
-        ["day", "event_type"],
-        {**base_parts, **delta_parts},
+        spec=["day", "event_type"],
+        partitions={**base_parts, **delta_parts},
     )
 
     # predicate: the first half of the distinct days (bounded driver
@@ -2466,13 +2281,7 @@ def snap_read_transform_pruned(
     (superset safety both ways); the row-level predicate must still be
     applied by the caller on the returned frame, exactly like every
     other pruning reader."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     transforms = doc.get("transforms", {})
     parts = doc.get("partitions", {})
     by_source: dict[str, list[tuple[str, dict]]] = {}
@@ -2505,19 +2314,7 @@ def snap_read_transform_pruned(
             for field, vals in wanted.items()
         )
     ]
-    ddir = os.path.join(table, "data")
-    if not planned:
-        first = os.path.join(ddir, doc["files"][0])
-        return (
-            spark.read.parquet(first).filter(F.lit(False)),
-            planned,
-            len(doc["files"]),
-        )
-    return (
-        spark.read.parquet(*[os.path.join(ddir, f) for f in planned]),
-        planned,
-        len(doc["files"]),
-    )
+    return _snap_frame(spark, table, doc, planned), planned, len(doc["files"])
 
 
 @query(
@@ -2581,8 +2378,13 @@ def table_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, parts = snap_add_files_transform_partitioned(
         ev, table, "transf_stage", transforms
     )
-    _snap_commit_partitioned(
-        table, files, 0, list(transforms), parts, transforms=transforms
+    _snap_commit(
+        table,
+        files,
+        0,
+        spec=list(transforms),
+        partitions=parts,
+        transforms=transforms,
     )
 
     lo, hi = int(m) // 4, int(m) // 2
@@ -2690,7 +2492,7 @@ def snap_compact_optimistic(
     still contain), which must conflict, not retry through."""
     srcs = set(sources)
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_manifest(table)
         files = doc["files"]
         if not srcs <= set(files):
             raise SnapCompactConflict(
@@ -2733,16 +2535,19 @@ def snap_compact_optimistic(
         # bitmap DVs are file-scoped positions: survivors' entries
         # stay valid verbatim; sources were refused above
         kept_dvb = {f: e for f, e in dvb.items() if f not in srcs}
-        if _snap_commit_cas(
-            table,
-            survivors + new_files,
-            v + 1,
-            stats=kept_stats,
-            txn=doc.get("txn"),
-            dv=kept_dv or None,
-            extra={"dvb": kept_dvb} if kept_dvb else None,
-        ):
-            return v + 1
+        try:
+            _snap_commit(
+                table,
+                survivors + new_files,
+                v + 1,
+                stats=kept_stats,
+                txn=doc.get("txn"),
+                dv=kept_dv or None,
+                dvb=kept_dvb or None,
+            )
+        except SnapCommitConflict:
+            continue
+        return v + 1
     raise RuntimeError(
         f"optimistic compaction lost {max_retries} consecutive races on {table}"
     )
@@ -2819,19 +2624,20 @@ def table_optimize_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended = _snap_add_files(
         ev.filter(F.expr("event_id % 10 >= 8")), table, "opt_append"
     )
-    won = _snap_commit_cas(table, base + appended, 1)
-    if not won:
-        raise RuntimeError("append unexpectedly lost v1")
+    _snap_commit(table, base + appended, 1)
     # the compactor's STALE successor (computed from v0) must lose —
     # committing it would silently drop the append
     stale = [f for f in base if f not in sources] + compacted
-    if _snap_commit_cas(table, stale, 1):
+    try:
+        _snap_commit(table, stale, 1)
         raise RuntimeError("stale compaction CAS won over the append")
+    except SnapCommitConflict:
+        pass
     # disjoint sets commute: the retry lands both effects
     v2 = snap_compact_optimistic(table, sources, compacted)
     if v2 != 2:
         raise RuntimeError(f"compaction retry landed v{v2}, expected v2")
-    _v, files_v2 = _snap_latest(table)
+    files_v2 = _snap_manifest(table)[1]["files"]
     expect_n = len(base) - len(sources) + len(compacted) + len(appended)
     if len(files_v2) != expect_n or not set(appended) <= set(files_v2):
         raise RuntimeError("commuted commit lost files")
@@ -2856,10 +2662,7 @@ def table_optimize_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "opt2_merge",
     )
     n_victim = spark.read.parquet(os.path.join(ddir2, victim)).count()
-    if not _snap_commit_cas(
-        table2, [f for f in base2 if f != victim] + merged, 1
-    ):
-        raise RuntimeError("merge rewrite lost v1 with no contender")
+    _snap_commit(table2, [f for f in base2 if f != victim] + merged, 1)
     merged_total = (
         _snap_read(spark, table2).agg(dsum(F.col("value")).alias("t")).first().t
     )
@@ -2877,8 +2680,8 @@ def table_optimize_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("overlapping compaction committed over the merge")
     except SnapCompactConflict:
         pass
-    v_latest, files_latest = _snap_latest(table2)
-    if v_latest != 1 or set(doomed) & set(files_latest):
+    v_latest, doc_latest = _snap_manifest(table2)
+    if v_latest != 1 or set(doomed) & set(doc_latest["files"]):
         raise RuntimeError("conflicted compaction left visible state")
     # the merged values survived intact (nothing resurrected)
     after = (
@@ -2930,11 +2733,9 @@ def snap_delete_optimistic(
     reads are O(matched files) metadata; the DV write is O(deleted
     keys); the COW write is O(rows of the above-threshold files)
     only. Returns the decision record for the pins."""
-    import json
-
     import pyarrow.parquet as pq
 
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_manifest(table)
     files = doc["files"]
     stats = doc.get("stats", {})
     dv_map = {f: list(v) for f, v in doc.get("dv", {}).items()}
@@ -3029,10 +2830,7 @@ def snap_delete_optimistic(
     successor = [f for f in files if f not in cow] + replacements
     new_stats = {f: stats[f] for f in files if f not in cow and f in stats}
     new_stats.update(rstats)
-    if not _snap_commit_cas(
-        table, successor, prev_v + 1, stats=new_stats, dv=dv_map
-    ):
-        raise RuntimeError("single-writer DV merge lost a CAS race")
+    _snap_commit(table, successor, prev_v + 1, stats=new_stats, dv=dv_map)
     return {
         "dv_files": new_dv_files,
         "cow_rewritten": cow,
@@ -3053,22 +2851,14 @@ def snap_read_mor(
     file-name scoping). The DV relation is O(deleted keys) and
     broadcasts; the data path is one scan + one broadcast anti-join —
     never a rewrite, never a shuffle."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, manifest = _snap_manifest(table, version)
     ddir = os.path.join(table, "data")
     if manifest.get("dvb"):
         raise ValueError(
             "table carries bitmap deletion vectors; read via "
             "snap_read_mor_bitmap (equality-key MoR would skip them)"
         )
-    df = spark.read.parquet(*[os.path.join(ddir, f) for f in manifest["files"]])
+    df = _snap_frame(spark, table, manifest)
     dv_map = manifest.get("dv", {})
     if not dv_map:
         return df
@@ -3204,7 +2994,7 @@ def table_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if leaked:
             raise RuntimeError(f"rewrite leaked {leaked} deleted rows")
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     if not doc.get("dv"):
         raise RuntimeError("manifest lost its DV map after the COW commit")
     if any(f in doc["dv"] for f in rec2["cow_rewritten"]):
@@ -3255,17 +3045,7 @@ def snap_diff(
     shared-file cancellation happens at MANIFEST grain before any
     read; exceptAll and the classify join shuffle only changed-file
     rows."""
-    import json
-
-    committed = _snap_versions(table)
-    for v in (v_from, v_to):
-        if v not in committed:
-            raise ValueError(f"snapshot v{v} is not committed")
-    docs = {}
-    for v in (v_from, v_to):
-        docs[v] = json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
+    docs = {v: _snap_manifest(table, v)[1] for v in (v_from, v_to)}
     removed = sorted(set(docs[v_from]["files"]) - set(docs[v_to]["files"]))
     added = sorted(set(docs[v_to]["files"]) - set(docs[v_from]["files"]))
     ddir = os.path.join(table, "data")
@@ -3422,8 +3202,7 @@ def table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = {f: bstats[f] for f in untouched}
     stats.update(rw_stats)
     stats.update(ins_stats)
-    if not _snap_commit_cas(table, untouched + rw + ins, 1, stats=stats):
-        raise RuntimeError("single-writer diff harness lost a CAS race")
+    _snap_commit(table, untouched + rw + ins, 1, stats=stats)
 
     diff = snap_diff(spark, table, 0, 1, "event_id")
     return (
@@ -3453,37 +3232,25 @@ def snap_branch_commit(
     table: str, name: str, files: list[str], stats: dict | None = None
 ) -> None:
     """Commit a BRANCH snapshot — a full candidate file list under
-    ``manifests/branches/{name}.json`` (same temp+fsync+os.replace
-    protocol), recording the main version it was built from. Branches
+    ``manifests/branches/{name}.json`` (``_write_durable``, last
+    writer wins), recording the main version it was built from. Branches
     are invisible to every main reader: the Iceberg audit-branch /
     Delta WAP staging half. ``files`` must be a superset of the base
     snapshot's list for publish-rebase to make sense (append-shaped
     branches)."""
-    import json
-
-    v, doc = _snap_latest_doc(table)
-    bdir = os.path.join(table, "manifests", "branches")
-    os.makedirs(bdir, exist_ok=True)
-    tmp = os.path.join(bdir, f".{name}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "name": name,
-                "base_version": v,
-                "base_files": sorted(doc["files"]),
-                "files": sorted(files),
-                "stats": stats or {},
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(bdir, f"{name}.json"))
+    v, doc = _snap_manifest(table)
+    branch = {
+        "name": name,
+        "base_version": v,
+        "base_files": sorted(doc["files"]),
+        "files": sorted(files),
+        "stats": stats or {},
+    }
+    path = os.path.join(table, "manifests", "branches", f"{name}.json")
+    _write_durable(path, json.dumps(branch), exclusive=False)
 
 
 def _snap_branch_doc(table: str, name: str) -> dict:
-    import json
-
     path = os.path.join(table, "manifests", "branches", f"{name}.json")
     if not os.path.exists(path):
         raise ValueError(f"no branch {name!r} on {table}")
@@ -3519,19 +3286,22 @@ def snap_branch_publish(table: str, name: str, max_retries: int = 20) -> int:
     doc = _snap_branch_doc(table, name)
     new = [f for f in doc["files"] if f not in set(doc["base_files"])]
     for _ in range(max_retries):
-        v, main = _snap_latest_doc(table)
+        v, main = _snap_manifest(table)
         stats = dict(main.get("stats", {}))
         stats.update(doc.get("stats", {}))
-        if _snap_commit_cas(
-            table,
-            main["files"] + new,
-            v + 1,
-            stats=stats or None,
-            txn=main.get("txn"),
-            dv=main.get("dv"),
-        ):
-            snap_branch_drop(table, name)
-            return v + 1
+        try:
+            _snap_commit(
+                table,
+                main["files"] + new,
+                v + 1,
+                stats=stats or None,
+                txn=main.get("txn"),
+                dv=main.get("dv"),
+            )
+        except SnapCommitConflict:
+            continue
+        snap_branch_drop(table, name)
+        return v + 1
     raise RuntimeError(
         f"branch publish lost {max_retries} consecutive races on {table}"
     )
@@ -3608,13 +3378,13 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     b_bad = _snap_add_files(corrupted, table, "wap_bad")
-    v1, files_v1 = _snap_latest(table)
+    v1, doc_v1 = _snap_manifest(table)
+    files_v1 = doc_v1["files"]
     snap_branch_commit(table, "etl_b", files_v1 + b_bad)
     if audit_clean("etl_b"):
         raise RuntimeError("corrupted batch passed its audit")
     snap_branch_drop(table, "etl_b")
-    v_after, files_after = _snap_latest(table)
-    if (v_after, files_after) != (v1, files_v1):
+    if _snap_manifest(table) != (v1, doc_v1):
         raise RuntimeError("failed audit perturbed main")
     leaked = (
         _snap_read(spark, table).filter(F.col("event_type").isNull()).count()
@@ -3651,11 +3421,9 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _snap_refs(table: str) -> dict[str, dict]:
     """All named refs: {name: {"kind": "tag"|"branch", "version": N}}.
-    Refs live under manifests/refs/ as one JSON file each (same
-    temp+fsync+rename protocol as manifests); in-progress temps are
-    invisible by the dot-prefix rule."""
-    import json
-
+    Refs live under manifests/refs/ as one JSON file each (written
+    by ``_write_durable``); in-progress temps are invisible by the
+    dot-prefix rule."""
     rdir = os.path.join(table, "manifests", "refs")
     if not os.path.isdir(rdir):
         return {}
@@ -3669,16 +3437,8 @@ def _snap_refs(table: str) -> dict[str, dict]:
 
 
 def _snap_ref_write(table: str, doc: dict) -> None:
-    import json
-
-    rdir = os.path.join(table, "manifests", "refs")
-    os.makedirs(rdir, exist_ok=True)
-    tmp = os.path.join(rdir, f".{doc['name']}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(rdir, f"{doc['name']}.json"))
+    path = os.path.join(table, "manifests", "refs", f"{doc['name']}.json")
+    _write_durable(path, json.dumps(doc), exclusive=False)
 
 
 def snap_ref_create(
@@ -3695,10 +3455,7 @@ def snap_ref_create(
     the pinned version."""
     if kind not in ("tag", "branch"):
         raise ValueError(f"unknown ref kind {kind!r}")
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"cannot ref uncommitted version {v}")
+    v = _snap_manifest(table, version)[0]
     existing = _snap_refs(table)
     if name in existing and existing[name]["kind"] == "tag":
         raise ValueError(f"tag {name!r} already exists (tags are immutable)")
@@ -3716,10 +3473,7 @@ def snap_ref_advance(table: str, name: str, version: int | None = None) -> int:
         raise ValueError(f"no ref {name!r} on {table}")
     if refs[name]["kind"] != "branch":
         raise ValueError(f"ref {name!r} is a tag (immutable)")
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"cannot advance to uncommitted version {v}")
+    v = _snap_manifest(table, version)[0]
     _snap_ref_write(table, {"name": name, "kind": "branch", "version": v})
     return v
 
@@ -3865,26 +3619,21 @@ def snap_restore(table: str, to_version: int, max_retries: int = 20) -> int:
     carried from the LATEST manifest, not the target: a streaming
     sink's replayed batch must still be recognized after a restore,
     or it would double-append."""
-    import json
-
-    committed = _snap_versions(table)
-    if to_version not in committed:
-        raise ValueError(f"snapshot v{to_version} is not committed")
-    target = json.loads(
-        open(os.path.join(table, "manifests", committed[to_version])).read()
-    )
+    _tv, target = _snap_manifest(table, to_version)
     for _ in range(max_retries):
-        v, latest = _snap_latest_doc(table)
-        doc_txn = latest.get("txn")
-        if _snap_commit_cas(
-            table,
-            target["files"],
-            v + 1,
-            stats=target.get("stats"),
-            txn=doc_txn,
-            dv=target.get("dv"),
-        ):
-            return v + 1
+        v, latest = _snap_manifest(table)
+        try:
+            _snap_commit(
+                table,
+                target["files"],
+                v + 1,
+                stats=target.get("stats"),
+                txn=latest.get("txn"),
+                dv=target.get("dv"),
+            )
+        except SnapCommitConflict:
+            continue
+        return v + 1
     raise RuntimeError(
         f"restore lost {max_retries} consecutive races on {table}"
     )
@@ -3942,8 +3691,7 @@ def table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "rst_bad",
     )
-    if not _snap_commit_cas(table, bad, 1):
-        raise RuntimeError("bad backfill lost v1 with no contender")
+    _snap_commit(table, bad, 1)
 
     v2 = snap_restore(table, 0)
     if v2 != 2:
@@ -4005,16 +3753,9 @@ def snap_read_two_level(
     assert EACH level pruned. The frame re-attaches identity-
     partition columns from the tuples, exactly like
     snap_read_partition_pruned."""
-    import json
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, manifest = _snap_manifest(table, version)
     parts = manifest.get("partitions", {})
     stats = manifest.get("stats", {})
     level1 = [
@@ -4127,7 +3868,7 @@ def table_two_level_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in files
     }
     stats = {f: s for f, s in stats.items() if s}
-    _snap_commit_partitioned(table, files, 0, ["day"], parts, stats=stats)
+    _snap_commit(table, files, 0, spec=["day"], partitions=parts, stats=stats)
 
     sel = set(days[: max(len(days) // 2, 1)])
     lo, hi = m // 8, m * 3 // 8
@@ -4273,8 +4014,7 @@ def table_mv_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = {f: bstats[f] for f in untouched}
     stats.update(rw_stats)
     stats.update(ins_stats)
-    if not _snap_commit_cas(table, untouched + rw + ins, 1, stats=stats):
-        raise RuntimeError("single-writer MV harness lost a CAS race")
+    _snap_commit(table, untouched + rw + ins, 1, stats=stats)
 
     # the refresh: signed deltas from the CDF only
     diff = snap_diff(spark, table, 0, 1, "event_id")
@@ -4355,7 +4095,7 @@ def snap_analyze_ndv(
     # retries so a lost race never rescans a file twice.
     known: dict[str, dict[str, dict[str, int]]] = {}
     for _ in range(20):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_manifest(table)
         # INCREMENTAL: files whose registers already ride the latest
         # manifest (same group_col AND same key_expr — a different key
         # expression makes old registers meaningless, so the carry is
@@ -4409,26 +4149,17 @@ def snap_analyze_ndv(
             for f in todo:
                 if f in ndv:
                     known[f] = ndv[f]
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
-        extra["ndv"] = {
+        carried = _snap_carry(doc)
+        carried["ndv"] = {
             "group_col": group_col,
             "key_expr": key_expr,
             "registers": ndv,
         }
-        if _snap_commit_cas(
-            table,
-            doc["files"],
-            v + 1,
-            stats=doc.get("stats"),
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-            extra=extra,
-        ):
-            return v + 1
+        try:
+            _snap_commit(table, doc["files"], v + 1, **carried)
+        except SnapCommitConflict:
+            continue
+        return v + 1
     raise RuntimeError(f"ANALYZE lost 20 consecutive races on {table}")
 
 
@@ -4468,13 +4199,7 @@ def snap_ndv_estimates(table: str, version: int | None = None) -> dict[str, int]
     stats: at 100 TB, "how many distinct users per event type" costs
     O(files·groups·m) integer maxes over JSON the planner already
     reads, not a table scan."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     merged: dict[str, dict[int, int]] = {}
     for per_group in doc["ndv"]["registers"].values():
         for g, regs in per_group.items():
@@ -4572,11 +4297,7 @@ def table_analyze_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
 
     # gate 1: ANALYZE was metadata-only
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[v1])).read())
+    d0, d1 = _snap_manifest(table, 0)[1], _snap_manifest(table, v1)[1]
     if d0["files"] != d1["files"]:
         raise RuntimeError("ANALYZE commit rewrote data files")
 
@@ -4714,7 +4435,7 @@ def snap_bloom_build(spark: SparkSession, table: str, col: str) -> int:
     known_m: dict[str, int] = {}
     known_words: dict[str, dict[str, int]] = {}
     for _ in range(20):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_manifest(table)
         prev = doc.get("bloom", {})
         if prev.get("col") == col:
             for f in doc["files"]:
@@ -4760,26 +4481,17 @@ def snap_bloom_build(spark: SparkSession, table: str, col: str) -> int:
                 known_words.setdefault(f, {})
             for row in words:
                 known_words[row["_file"]][str(row["w"])] = int(row["v"])
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
-        extra["bloom"] = {
+        carried = _snap_carry(doc)
+        carried["bloom"] = {
             "col": col,
             "m": {f: known_m[f] for f in doc["files"]},
             "words": {f: known_words[f] for f in doc["files"]},
         }
-        if _snap_commit_cas(
-            table,
-            doc["files"],
-            v + 1,
-            stats=doc.get("stats"),
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-            extra=extra,
-        ):
-            return v + 1
+        try:
+            _snap_commit(table, doc["files"], v + 1, **carried)
+        except SnapCommitConflict:
+            continue
+        return v + 1
     raise RuntimeError(f"bloom build lost 20 consecutive races on {table}")
 
 
@@ -4792,14 +4504,9 @@ def snap_read_bloom_pruned(
     filter can only skip, never lose). Probing is pure planning-time
     integer arithmetic on JSON the planner already read: zero file
     opens, zero cluster work. Returns (frame, planned names, total)."""
-    import json
     import zlib
 
-    committed = _snap_versions(table)
-    v = max(committed)
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table)
     bloom = doc.get("bloom", {})
     blooms = bloom.get("words", {})
     m_map = bloom.get("m", {})
@@ -4815,18 +4522,10 @@ def snap_read_bloom_pruned(
             (wmap.get(str(p // 32), 0) >> (p % 32)) & 1 for p in positions
         ):
             planned.append(f)
-    paths = [os.path.join(table, "data", f) for f in planned]
-    if not paths:
-        # every file excluded: the probe value is definitively absent
-        # (blooms have no false negatives) — an empty frame with the
-        # table's schema, zero files opened: the membership-miss win.
-        first = os.path.join(table, "data", doc["files"][0])
-        return (
-            spark.read.parquet(first).filter(F.lit(False)),
-            planned,
-            len(doc["files"]),
-        )
-    return spark.read.parquet(*paths), planned, len(doc["files"])
+    # every file excluded: the probe value is definitively absent
+    # (blooms have no false negatives) — an empty frame with the
+    # table's schema, zero rows scanned: the membership-miss win.
+    return _snap_frame(spark, table, doc, planned), planned, len(doc["files"])
 
 
 @query(
@@ -4883,18 +4582,14 @@ def table_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = snap_bloom_build(spark, table, "text")
 
     # gate 1: metadata-only commit
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[v1])).read())
+    d0, d1 = _snap_manifest(table, 0)[1], _snap_manifest(table, v1)[1]
     if d0["files"] != d1["files"]:
         raise RuntimeError("bloom build rewrote data files")
 
     # resolve the probe text through doc_id STATS pruning (composed)
     min_id = min(s["doc_id"][0] for s in d1["stats"].values())
-    probe_df, id_planned, total = snap_read_pruned(
-        spark, table, "doc_id", min_id + 7, min_id + 7
+    probe_df, id_planned, total = snap_read_pruned_multi(
+        spark, table, {"doc_id": (min_id + 7, min_id + 7)}
     )
     probe = probe_df.filter(F.col("doc_id") == min_id + 7).first()["text"]
     if len(id_planned) >= total:
@@ -4948,19 +4643,15 @@ def snap_read_pruned_multi(
     """Multi-column stats-pruned snapshot read: a file is planned only
     if EVERY predicate column's recorded [min, max] span intersects
     its range (missing stats for a column keep the file — superset
-    safety per dimension, same contract as snap_read_pruned). This is
-    the planner that makes z-order clustering pay: after the rewrite,
-    per-file spans are tight in ALL clustered dimensions, so each
-    predicate prunes independently and their conjunction multiplies."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    safety per dimension). Returns (frame, planned file names, total
+    files) so callers can assert skipping actually happened; the frame
+    still needs the row-level predicate applied — stats prune at FILE
+    grain — and an empty plan is an empty frame with the table's
+    columns. This is the planner that makes z-order clustering pay:
+    after the rewrite, per-file spans are tight in ALL clustered
+    dimensions, so each predicate prunes independently and their
+    conjunction multiplies."""
+    v, manifest = _snap_manifest(table, version)
     stats = manifest.get("stats", {})
     planned = [
         f
@@ -4972,8 +4663,11 @@ def snap_read_pruned_multi(
             for c, (lo, hi) in preds.items()
         )
     ]
-    paths = [os.path.join(table, "data", f) for f in planned]
-    return spark.read.parquet(*paths), planned, len(manifest["files"])
+    return (
+        _snap_frame(spark, table, manifest, planned),
+        planned,
+        len(manifest["files"]),
+    )
 
 
 def snap_optimize_zorder(
@@ -5014,7 +4708,7 @@ def snap_optimize_zorder(
     landing between our read and the CAS raises SnapCompactConflict:
     those deletes targeted rows we already re-wrote, and carrying
     the entry forward would point at a file that no longer exists."""
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_manifest(table)
     stats = doc.get("stats", {})
     dv_seen = {
         f: sorted(dvs) for f, dvs in (doc.get("dv") or {}).items()
@@ -5057,7 +4751,7 @@ def snap_optimize_zorder(
     )
     srcs = set(doc["files"])
     for _ in range(max_retries):
-        lv, ldoc = _snap_latest_doc(table)
+        lv, ldoc = _snap_manifest(table)
         lfiles = ldoc["files"]
         if not srcs <= set(lfiles):
             raise SnapCompactConflict(
@@ -5079,15 +4773,18 @@ def snap_optimize_zorder(
         lstats = ldoc.get("stats", {})
         merged = {f: lstats[f] for f in survivors if f in lstats}
         merged.update(new_stats)
-        if _snap_commit_cas(
-            table,
-            survivors + new_files,
-            lv + 1,
-            stats=merged,
-            txn=ldoc.get("txn"),
-            dv=surviving_dv or None,
-        ):
-            return lv + 1
+        try:
+            _snap_commit(
+                table,
+                survivors + new_files,
+                lv + 1,
+                stats=merged,
+                txn=ldoc.get("txn"),
+                dv=surviving_dv or None,
+            )
+        except SnapCommitConflict:
+            continue
+        return lv + 1
     raise RuntimeError(
         f"zorder optimize lost {max_retries} consecutive races on {table}"
     )
@@ -5209,8 +4906,6 @@ def snap_history(spark: SparkSession, table: str) -> DataFrame:
     files); on a real deployment the row counts ride the manifest at
     commit time (the Iceberg snapshot summary) and even the footer
     reads disappear."""
-    import json
-
     import pyarrow.parquet as pq
 
     committed = _snap_versions(table)
@@ -5227,9 +4922,7 @@ def snap_history(spark: SparkSession, table: str) -> DataFrame:
     out = []
     prev: set[str] = set()
     for v in sorted(committed):
-        doc = json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
+        doc = _snap_manifest(table, v)[1]
         cur = set(doc["files"])
         added, removed = cur - prev, prev - cur
         if v == sorted(committed)[0]:
@@ -5331,7 +5024,7 @@ def table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_analyze_ndv(spark, table, "event_type", "event_id + 1")
 
     # v3 rewrite: compact everything into 2 files
-    v2, doc2 = _snap_latest_doc(table)
+    v2, doc2 = _snap_manifest(table)
     staged = _snap_add_files(
         _snap_read(spark, table, v2).repartition(2), table, "hist_c"
     )
@@ -5364,15 +5057,9 @@ def snap_metadata_files(
     this is pure manifest arithmetic the planner already performs,
     exposed as a frame you can join, filter, and alert on (small-file
     audits, skew hunts, partition health)."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     parts = doc.get("partitions", {})
     stats = doc.get("stats", {})
     ddir = os.path.join(table, "data")
@@ -5461,8 +5148,6 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file audit, skew hunt, and partition-health dashboard all
     become metadata queries. Reference parity: no metadata-table
     surface in the reference (SURVEY §2 B.1 extension)."""
-    import json as _json
-
     from steaminganalysis_spark.scratch import scratch_dir
 
     table = f"{scratch_dir('snapmeta')}/table"
@@ -5480,7 +5165,7 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in files
     }
     stats = {f: s for f, s in stats.items() if s}
-    _snap_commit_partitioned(table, files, 0, ["day"], parts, stats=stats)
+    _snap_commit(table, files, 0, spec=["day"], partitions=parts, stats=stats)
 
     frel = snap_metadata_files(spark, table, span_col="event_id")
     frows = frel.collect()
@@ -5488,7 +5173,7 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("files relation lost or invented files")
     if any(r.size_bytes <= 0 or r.row_count <= 0 for r in frows):
         raise RuntimeError("files relation carries non-positive sizes")
-    if any(set(_json.loads(r.partition)) != {"day"} for r in frows):
+    if any(set(json.loads(r.partition)) != {"day"} for r in frows):
         raise RuntimeError("files relation tuple is not the {day} spec")
 
     prel = snap_metadata_partitions(
@@ -5505,18 +5190,11 @@ def table_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"snapshots relation wrong: {hist}")
 
     # NULL-poisoning: strip one file's stats in a successor commit
-    v0doc = _json.loads(
-        open(
-            os.path.join(table, "manifests", _snap_versions(table)[0])
-        ).read()
-    )
-    holed = dict(v0doc.get("stats", {}))
+    holed = dict(_snap_manifest(table, 0)[1].get("stats", {}))
     victim = next(iter(holed))
     vday = parts[victim]["day"]
     del holed[victim]
-    _snap_commit_partitioned(
-        table, files, 1, ["day"], parts, stats=holed
-    )
+    _snap_commit(table, files, 1, spec=["day"], partitions=parts, stats=holed)
     poisoned = {
         r.day: r
         for r in snap_metadata_partitions(
@@ -5581,7 +5259,7 @@ def snap_auto_optimize(
     import math
 
     rel = snap_metadata_files(spark, table).collect()
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_manifest(table)
     dv = doc.get("dv") or {}
     dvb = doc.get("dvb") or {}
     small = sorted(r.file for r in rel if r.row_count < small_rows)
@@ -5694,7 +5372,7 @@ def table_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.getmtime(os.path.join(ddir, f)))
         for f in big
     }
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     drip = sorted(set(doc["files"]) - set(big))
     import pyarrow.parquet as pq
 
@@ -5721,7 +5399,7 @@ def table_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if meta_before != meta_after:
         raise RuntimeError("auto-optimize touched a well-sized file")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     if len(doc2["files"]) != len(big) + 1:
         raise RuntimeError(f"unexpected file count: {len(doc2['files'])}")
 
@@ -5810,7 +5488,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     ddir = os.path.join(table, "data")
-    _, doc0 = _snap_latest_doc(table)
+    _, doc0 = _snap_manifest(table)
     drip = sorted(set(doc0["files"]) - set(big))
 
     # the curation delete: ids ≡ 11 (mod 24) live only in drip files
@@ -5818,7 +5496,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_delete_bitmap(
         spark, table, ev.filter(F.col("event_id") % 24 == 11), "event_id"
     )
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     dirty = sorted(doc1.get("dvb") or {})
     if not dirty or not set(dirty) <= set(drip) or len(dirty) != 5:
         raise RuntimeError(f"harness broke: dirty={dirty}")
@@ -5849,7 +5527,7 @@ def table_auto_optimize_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if meta_before != meta_after:
         raise RuntimeError("auto-optimize touched a well-sized file")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     if doc2.get("dvb"):
         raise RuntimeError("fold-then-compact left dvb entries behind")
     if len(doc2["files"]) != len(big) + 1:
@@ -5987,7 +5665,7 @@ def corpus_curation_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if not decision["dv_targets"]:
         raise RuntimeError("curation commit recorded no DV targets")
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     if sorted(doc1["files"]) != sorted(files):
         raise RuntimeError("pure-DV commit changed the data file list")
 
@@ -6044,45 +5722,6 @@ corpus_curation_commits.__doc__ = corpus_curation_commits.__doc__.replace(
 # ---------- column-mapping rename evolution (r13)
 
 
-def snap_commit_mapped(
-    table: str,
-    files: list[str],
-    version: int,
-    schema: dict[str, str],
-    file_schemas: dict[str, dict[str, str]],
-    prev_file_schemas: dict[str, dict[str, str]] | None = None,
-) -> None:
-    """Manifest commit carrying COLUMN MAPPING metadata (the Iceberg
-    field-id / Delta column-mapping core): ``schema`` maps stable
-    field ids to their CURRENT logical names; ``file_schemas`` maps
-    each data file's field ids to the PHYSICAL names it was written
-    with. A rename is then a metadata-only commit that changes
-    ``schema`` and touches no file; readers resolve each file's
-    physical columns through its recorded mapping. Same atomic
-    temp+fsync+os.replace protocol; ``prev_file_schemas`` carries
-    earlier cohorts forward."""
-    import json
-
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    merged = dict(prev_file_schemas or {})
-    merged.update(file_schemas)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "files": sorted(files),
-                "schema": schema,
-                "file_schemas": merged,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
-
-
 def snap_read_mapped(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:
@@ -6093,17 +5732,16 @@ def snap_read_mapped(
     instead surface a renamed column as two half-NULL columns — the
     exact failure column mapping exists to prevent. Cost: one scan per
     distinct write-era mapping (bounded by the number of schema
-    commits, never by file count)."""
-    import json
+    commits, never by file count). The manifest carries COLUMN
+    MAPPING metadata (the Iceberg field-id / Delta column-mapping
+    core): ``schema`` maps stable field ids to their CURRENT logical
+    names; ``file_schemas`` maps each data file's field ids to the
+    PHYSICAL names it was written with — so a rename is a
+    metadata-only commit that changes ``schema`` and touches no
+    file."""
     from collections import defaultdict
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     current = doc["schema"]  # field id -> current logical name
     groups: dict[tuple, list[str]] = defaultdict(list)
     for f in doc["files"]:
@@ -6170,21 +5808,17 @@ def table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         old.repartitionByRange(4, "event_id"), table, "cm_base"
     )
     schema_v0 = {"1": "event_id", "2": "event_type", "3": "value"}
-    snap_commit_mapped(
-        table, f0, 0, schema_v0, {f: schema_v0 for f in f0}
+    _snap_commit(
+        table, f0, 0, schema=schema_v0, file_schemas={f: schema_v0 for f in f0}
     )
 
     # v1: RENAME value -> amount, metadata-only
-    import json as _json
-
-    committed = _snap_versions(table)
-    d0 = _json.loads(open(os.path.join(table, "manifests", committed[0])).read())
+    _v, d0 = _snap_manifest(table, 0)
     schema_v1 = {"1": "event_id", "2": "event_type", "3": "amount"}
-    snap_commit_mapped(
-        table, d0["files"], 1, schema_v1, {}, prev_file_schemas=d0["file_schemas"]
+    _snap_commit(
+        table, d0["files"], 1, schema=schema_v1, file_schemas=d0["file_schemas"]
     )
-    committed = _snap_versions(table)
-    d1 = _json.loads(open(os.path.join(table, "manifests", committed[1])).read())
+    _v, d1 = _snap_manifest(table, 1)
     if d1["files"] != d0["files"]:
         raise RuntimeError("rename commit touched data files")
 
@@ -6194,13 +5828,12 @@ def table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f2 = _snap_add_files(new.coalesce(2), table, "cm_new")
     file_schema_new = {"1": "event_id", "2": "event_type", "3": "amount"}
-    snap_commit_mapped(
+    _snap_commit(
         table,
         d1["files"] + f2,
         2,
-        schema_v1,
-        {f: file_schema_new for f in f2},
-        prev_file_schemas=d1["file_schemas"],
+        schema=schema_v1,
+        file_schemas={**d1["file_schemas"], **{f: file_schema_new for f in f2}},
     )
 
     # live gate: the name-based read exhibits the half-NULL failure
@@ -6255,46 +5888,28 @@ def snap_commit_sharded(
     the table's files. This is what keeps planning sane at 10^6 files:
     a monolithic manifest re-parses every file's entry for every
     query; shards localize both reads AND future commits (an append
-    to one partition rewrites one shard + the list)."""
-    import json
-    import uuid as _uuid
-
-    mdir = os.path.join(table, "manifests")
-    sdir = os.path.join(mdir, "shards")
-    os.makedirs(sdir, exist_ok=True)
+    to one partition rewrites one shard + the list). The list itself
+    is an ordinary ``_snap_commit``."""
+    sdir = os.path.join(table, "manifests", "shards")
     shard_names: dict[str, str] = {}
     for part, files in sorted(files_by_part.items()):
-        name = f"s-{_uuid.uuid4().hex[:12]}.json"
+        name = f"s-{uuid.uuid4().hex[:12]}.json"
         doc = {"part": part, "files": sorted(files)}
         if stats_by_part and part in stats_by_part:
             doc["stats"] = stats_by_part[part]
-        tmp = os.path.join(sdir, f".{name}.inprogress")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(sdir, name))
+        _write_durable(os.path.join(sdir, name), json.dumps(doc), exclusive=False)
         shard_names[part] = name
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "format": "manifest-list",
-                "part_col": part_col,
-                "shards": shard_names,
-                # a flat file list rides along so every existing
-                # full-table reader (_snap_read, history, vacuum)
-                # keeps working — the list is the PLANNING shortcut
-                "files": sorted(
-                    f for fs in files_by_part.values() for f in fs
-                ),
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
+    _snap_commit(
+        table,
+        # a flat file list rides along so every existing full-table
+        # reader (_snap_read, history, vacuum) keeps working — the
+        # list is the PLANNING shortcut
+        [f for fs in files_by_part.values() for f in fs],
+        version,
+        format="manifest-list",
+        part_col=part_col,
+        shards=shard_names,
+    )
 
 
 def snap_read_manifest_list(
@@ -6310,13 +5925,7 @@ def snap_read_manifest_list(
     total_shards, planned_files); the frame carries the partition
     value as a literal column (the partition-identity projection the
     partitioned-table reads use)."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     if doc.get("format") != "manifest-list":
         raise ValueError(f"snapshot v{v} is not a manifest-list commit")
     sdir = os.path.join(table, "manifests", "shards")
@@ -6443,15 +6052,9 @@ def snap_agg_pushdown(
     NULL — let the engine path state that). DV-carrying manifests also
     return None: deleted-but-unrewritten rows are invisible to reads
     but present in footers, so pushdown would overcount."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     if not doc["files"] or doc.get("dv") or doc.get("dvb"):
         return None
     stats = doc.get("stats", {})
@@ -6499,15 +6102,9 @@ def snap_agg_pushdown_dv(
     pyarrow, driver-side, O(deleted keys) — delete metadata, not data
     pages; at 100 TB this keeps dashboard COUNTs on actively-deleted
     tables at manifest cost."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     if not doc["files"] or doc.get("dvb"):
         return None  # bitmap-encoded DVs have their own O(files) path
     stats = doc.get("stats", {})
@@ -6627,20 +6224,12 @@ def table_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"pushdown diverged from scan: {got} vs {scanned}")
 
     # gate 2: eligibility — strip one file's stats, pushdown refuses
-    import json as _json
-
-    committed = _snap_versions(table)
-    mpath = os.path.join(table, "manifests", committed[0])
-    doc = _json.loads(open(mpath).read())
-    holed = dict(doc)
+    _v, doc = _snap_manifest(table, 0)
     holed_stats = dict(doc["stats"])
     del holed_stats[files[0]]
-    holed["stats"] = holed_stats
-    holed["version"] = 1
-    tmp = os.path.join(table, "manifests", ".v1.json.inprogress")
-    with open(tmp, "w") as fh:
-        _json.dump(holed, fh)
-    os.replace(tmp, os.path.join(table, "manifests", "v1.json"))
+    _snap_commit(
+        table, doc["files"], 1, **{**_snap_carry(doc), "stats": holed_stats}
+    )
     if snap_agg_pushdown(table, ["event_id", "user_id"], version=1) is not None:
         raise RuntimeError("pushdown answered from partial stats")
 
@@ -6721,7 +6310,7 @@ def table_agg_pushdown_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ev.filter((F.col("event_id") % 13 == 5) & (F.col("event_id") > cut))
     snap_delete_optimistic(spark, table, keys, "event_id")
 
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     dv_map = doc.get("dv", {})
     if not dv_map or argmin_f in dv_map:
         raise RuntimeError(f"harness broke: dv placement {sorted(dv_map)}")
@@ -6785,15 +6374,11 @@ def snap_read_incremental(
     a day's catch-up read over a 100 TB table plans only the appended
     files, with strategy selection costing O(versions·files) name-set
     arithmetic on manifests the planner already reads."""
-    import json
-
     committed = _snap_versions(table)
     if from_v not in committed or to_v not in committed or from_v > to_v:
         raise ValueError(f"bad version range [{from_v}, {to_v}]")
     docs = {
-        v: json.loads(
-            open(os.path.join(table, "manifests", committed[v])).read()
-        )
+        v: _snap_manifest(table, v)[1]
         for v in sorted(committed)
         if from_v <= v <= to_v
     }
@@ -6965,18 +6550,21 @@ def snap_commit_checked(
                 f"commit (example row: {bad[0]})"
             )
     for _ in range(max_retries):
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_manifest(table)
         merged = dict(doc.get("stats", {}))
         merged.update(new_stats)
-        if _snap_commit_cas(
-            table,
-            doc["files"] + new_files,
-            v + 1,
-            stats=merged,
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-        ):
-            return v + 1, mode
+        try:
+            _snap_commit(
+                table,
+                doc["files"] + new_files,
+                v + 1,
+                stats=merged,
+                txn=doc.get("txn"),
+                dv=doc.get("dv"),
+            )
+        except SnapCommitConflict:
+            continue
+        return v + 1, mode
     raise RuntimeError(
         f"checked append lost {max_retries} consecutive races on {table}"
     )
@@ -7071,7 +6659,7 @@ def table_constraint_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rejected = True
     if not rejected:
         raise RuntimeError("corrupted batch was not rejected")
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_manifest(table)
     if v != v2 or set(d9) & set(doc["files"]):
         raise RuntimeError("rejected commit left staged files visible")
 
@@ -7153,28 +6741,19 @@ def snap_commit_with_nulls(
         if n:
             new_nulls[f] = {"rows": md.num_rows, **n}
     for _ in range(max_retries):
-        has_manifest = os.path.isdir(
-            os.path.join(table, "manifests")
-        ) and _snap_versions(table)
-        v, doc = _snap_latest_doc(table) if has_manifest else (-1, {"files": []})
-        extra = {
-            k: val
-            for k, val in doc.items()
-            if k not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-        }
-        nulls = dict(doc.get("nulls", {}))
-        nulls.update(new_nulls)
-        extra["nulls"] = nulls
-        if _snap_commit_cas(
-            table,
-            doc["files"] + kept,
-            v + 1,
-            stats=doc.get("stats"),
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-            extra=extra,
-        ):
-            return kept, nulls
+        has_table = bool(_snap_versions(table))
+        v, doc = _snap_manifest(table) if has_table else (-1, {"files": []})
+        nulls = {**doc.get("nulls", {}), **new_nulls}
+        try:
+            _snap_commit(
+                table,
+                doc["files"] + kept,
+                v + 1,
+                **{**_snap_carry(doc), "nulls": nulls},
+            )
+        except SnapCommitConflict:
+            continue
+        return kept, nulls
     raise RuntimeError(
         f"null-stats append lost {max_retries} consecutive races on {table}"
     )
@@ -7192,13 +6771,7 @@ def snap_read_null_pruned(
     null_count < rows. Files without recorded null stats are always
     kept (superset safety). The frame still needs the row-level
     predicate — pruning is at FILE grain."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     nulls = doc.get("nulls", {})
     planned = []
     for f in doc["files"]:
@@ -7209,15 +6782,7 @@ def snap_read_null_pruned(
             planned.append(f)
         elif not want_null and rec[col] < rec["rows"]:
             planned.append(f)
-    paths = [os.path.join(table, "data", f) for f in planned]
-    if not paths:
-        first = os.path.join(table, "data", doc["files"][0])
-        return (
-            spark.read.parquet(first).filter(F.lit(False)),
-            planned,
-            len(doc["files"]),
-        )
-    return spark.read.parquet(*paths), planned, len(doc["files"])
+    return _snap_frame(spark, table, doc, planned), planned, len(doc["files"])
 
 
 @query(
@@ -7412,43 +6977,26 @@ def _dvb_write_sidecar(table: str, comp: bytes) -> str:
     """Content-addressed sidecar write: dv/<sha256[:24]>.dvb holds the
     raw zlib-compressed bitset. Idempotent — concurrent/duplicate
     writers of the same bitmap produce the same name and identical
-    bytes; tmp+rename keeps partial writes invisible. Returns the
-    table-relative ref recorded in the manifest."""
+    bytes; ``_write_durable`` keeps partial writes invisible. Returns
+    the table-relative ref recorded in the manifest."""
     import hashlib
-    import uuid as _uuid
 
     rel = os.path.join("dv", hashlib.sha256(comp).hexdigest()[:24] + ".dvb")
     path = os.path.join(table, rel)
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.{_uuid.uuid4().hex[:8]}.inprogress"
-        with open(tmp, "wb") as f:
-            f.write(comp)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-    else:
-        # Content-addressed HIT: the byte-identical sidecar may be an
-        # ORPHAN from an earlier fold+expire cycle whose mtime already
-        # aged past snap_expire's orphan grace. Between this return and
-        # the delete's CAS, a concurrent snap_expire could sweep the
-        # old-mtime file and leave a committed manifest pointing at a
-        # missing dv/*.dvb (r16 ADVICE, medium). Touching it re-arms
-        # the grace window, making the stage-then-commit race identical
-        # to the fresh-write case. The touch itself races the same
-        # sweep (r17 ADVICE, low): if the sidecar vanishes between the
-        # exists() check and the utime, fall through to a fresh write —
-        # which fully closes the window instead of failing the delete.
-        try:
-            os.utime(path, None)
-        except FileNotFoundError:
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.{_uuid.uuid4().hex[:8]}.inprogress"
-            with open(tmp, "wb") as f:
-                f.write(comp)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)
+    # Content-addressed HIT: the byte-identical sidecar may be an
+    # ORPHAN from an earlier fold+expire cycle whose mtime already
+    # aged past snap_expire's orphan grace. Between this return and
+    # the delete's CAS, a concurrent snap_expire could sweep the
+    # old-mtime file and leave a committed manifest pointing at a
+    # missing dv/*.dvb (r16 ADVICE, medium). Touching it re-arms the
+    # grace window, making the stage-then-commit race identical to the
+    # fresh-write case. A miss — never written, or swept between any
+    # earlier check and the touch (r17 ADVICE, low) — writes it fresh,
+    # which fully closes the window instead of failing the delete.
+    try:
+        os.utime(path, None)
+    except FileNotFoundError:
+        _write_durable(path, comp, exclusive=False)
     return rel
 
 
@@ -7689,7 +7237,7 @@ def snap_delete_bitmap(
     entries (executor-side, O(files)), and CAS again. The one true
     conflict — a target file rewritten/compacted away mid-flight, so
     our positions index a dead layout — raises SnapDeleteConflict."""
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_manifest(table)
     files = doc["files"]
     stats = doc.get("stats", {})
     if doc.get("dv"):
@@ -7762,7 +7310,7 @@ def snap_delete_bitmap(
     base_entries = {f: base_dvb.get(f) for f in ours}
 
     for _ in range(max_retries):
-        cur_v, cur = _snap_latest_doc(table)
+        cur_v, cur = _snap_manifest(table)
         if cur.get("dv"):
             raise ValueError(
                 "table gained pair-rows DVs mid-delete; mixing encodings "
@@ -7797,27 +7345,18 @@ def snap_delete_bitmap(
             ours[f]["card"] - (cur_dvb[f]["card"] if f in cur_dvb else 0)
             for f in ours
         )
-        if _snap_commit_cas(
-            table,
-            cur["files"],
-            cur_v + 1,
-            stats=cur.get("stats"),
-            txn=cur.get("txn"),
-            extra={
-                **{
-                    k: v
-                    for k, v in cur.items()
-                    if k
-                    not in ("version", "files", "stats", "txn", "dv", "dvb", "commit_ts")
-                },
-                "dvb": {**cur_dvb, **ours},
-            },
-        ):
-            return {
-                "dvb_targets": sorted(ours),
-                "deleted_rows": new_rows,
-                "files_rewritten": [],
-            }
+        carried = _snap_carry(cur)
+        carried.pop("dv", None)
+        carried["dvb"] = {**cur_dvb, **ours}
+        try:
+            _snap_commit(table, cur["files"], cur_v + 1, **carried)
+        except SnapCommitConflict:
+            continue
+        return {
+            "dvb_targets": sorted(ours),
+            "deleted_rows": new_rows,
+            "files_rewritten": [],
+        }
     raise RuntimeError(
         f"bitmap delete lost {max_retries} consecutive races on {table}"
     )
@@ -7838,17 +7377,8 @@ def snap_read_mor_bitmap(
     per-executor state bounded by the bitmaps of locally-read files
     instead of every deleted position in the table). Either way: no
     rewrite, no shuffle of data rows."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
-    ddir = os.path.join(table, "data")
-    df = spark.read.parquet(*[os.path.join(ddir, f) for f in manifest["files"]])
+    v, manifest = _snap_manifest(table, version)
+    df = _snap_frame(spark, table, manifest)
     dvb = {
         f: e
         for f, e in (manifest.get("dvb") or {}).items()
@@ -7900,15 +7430,9 @@ def snap_agg_pushdown_bitmap(
     the caller scans. Any file lacking stats for a requested column
     refuses outright, as does an empty table or a pair-DV manifest
     (that encoding has its own path)."""
-    import json
-
     import pyarrow.parquet as pq
 
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    doc = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, doc = _snap_manifest(table, version)
     if not doc["files"] or doc.get("dv"):
         return None
     stats = doc.get("stats", {})
@@ -8002,7 +7526,7 @@ def table_merge_dv_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if rec1["files_rewritten"] or rec2["files_rewritten"]:
         raise RuntimeError("bitmap delete rewrote data files")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     if sorted(doc["files"]) != sorted(files) or any(
         os.path.getsize(os.path.join(ddir, f)) != sizes0[f] for f in files
     ):
@@ -8091,15 +7615,16 @@ _ARROW_TO_SPARK = {
 }
 
 
-def _snap_commit_schema_wide(
+def _snap_check_schema_wide(
     table: str,
-    files: list[str],
     version: int,
     schema: list[tuple[str, str, object]],
     new_files: list[str] | None = None,
 ) -> None:
-    """Manifest commit carrying (column, arrow-type, default) triples.
-    Footer validation per appended file: unknown columns reject; a
+    """Commit-time validation for a manifest v{version} carrying
+    (column, arrow-type, default) triples (committed as ``schema=``);
+    raises ValueError before the commit. Footer validation per
+    appended file: unknown columns reject; a
     column typed EXACTLY as declared or safely WIDENABLE to it
     (_WIDEN_OK) passes; anything else — including narrowing, the
     silent-corruption direction — rejects. Missing columns are fine
@@ -8108,8 +7633,6 @@ def _snap_commit_schema_wide(
     committed schema (identical or _WIDEN_OK per column, no drops) so
     a metadata-only narrowing commit rejects too (ADVICE r15).
     O(new files) footer reads + one prior manifest, zero data pages."""
-    import json
-
     declared = {name: (t, d) for name, t, d in schema}
     # Validate the DECLARED schema against the previous manifest's
     # (ADVICE r15): a metadata-only commit that NARROWS a column
@@ -8119,16 +7642,9 @@ def _snap_commit_schema_wide(
     # _WIDEN_OK transitions pass; dropping a declared column rejects
     # too (this surface has no DROP COLUMN — losing a column silently
     # is the same corruption class). O(1): one prior-manifest read.
-    mdir = os.path.join(table, "manifests")
-    prior = [
-        v
-        for v in (_snap_versions(table) if os.path.isdir(mdir) else {})
-        if v < version
-    ]
+    prior = [v for v in _snap_versions(table) if v < version]
     if prior:
-        prev_doc = json.loads(
-            open(os.path.join(mdir, _snap_versions(table)[max(prior)])).read()
-        )
+        prev_doc = _snap_manifest(table, max(prior))[1]
         prev_schema = {n: t for n, t, _d in (tuple(p) for p in prev_doc.get("schema") or [])}
         bad_tr = sorted(
             n
@@ -8164,22 +7680,6 @@ def _snap_commit_schema_wide(
                 f"file {n} type-conflicts with the table schema on: {bad} "
                 f"({[(c, got[c], declared[c][0]) for c in bad]})"
             )
-    mdir = os.path.join(table, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "files": sorted(files),
-                "schema": [list(p) for p in schema],
-                "schema_rev": 3,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mdir, f"v{version}.json"))
 
 
 def _snap_read_schema_wide(
@@ -8194,15 +7694,7 @@ def _snap_read_schema_wide(
     type — so int32-footer files read as int64 under a widened schema
     with no rewrite. Groups union by name; within a group parquet
     column pruning reaches every file."""
-    import json
-
-    committed = _snap_versions(table)
-    v = max(committed) if version is None else version
-    if v not in committed:
-        raise ValueError(f"snapshot v{v} is not committed (have {sorted(committed)})")
-    manifest = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    v, manifest = _snap_manifest(table, version)
     schema = [tuple(p) for p in manifest["schema"]]
     ddir = os.path.join(table, "data")
     # group by the full footer signature of declared columns (name →
@@ -8301,12 +7793,14 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wide_base",
     )
     schema_v0 = [("event_id", "int32", None), ("cents", "int32", None)]
-    _snap_commit_schema_wide(table, base, 0, schema_v0, new_files=base)
+    _snap_check_schema_wide(table, 0, schema_v0, base)
+    _snap_commit(table, base, 0, schema=schema_v0)
 
     # v1: WIDEN event_id → int64 (metadata-only), then append ids
     # above INT32 MAX — only representable under the widened type
     schema_v1 = [("event_id", "int64", None), ("cents", "int32", None)]
-    _snap_commit_schema_wide(table, base, 1, schema_v1)
+    _snap_check_schema_wide(table, 1, schema_v1)
+    _snap_commit(table, base, 1, schema=schema_v1)
     wide1 = _snap_add_files(
         ev.filter(F.col("event_id") % 10 == 8).select(
             (F.col("event_id") + F.lit(3000000000)).alias("event_id"), cents
@@ -8314,15 +7808,12 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "wide_delta1",
     )
-    _snap_commit_schema_wide(
-        table, base + wide1, 2, schema_v1, new_files=wide1
-    )
+    _snap_check_schema_wide(table, 2, schema_v1, wide1)
+    _snap_commit(table, base + wide1, 2, schema=schema_v1)
     # narrowing back over the wide file must REJECT (the
     # silent-corruption direction), as must a genuine conflict
     try:
-        _snap_commit_schema_wide(
-            table, base + wide1, 3, schema_v0, new_files=wide1
-        )
+        _snap_check_schema_wide(table, 3, schema_v0, wide1)
         raise RuntimeError("narrowing commit was accepted")
     except ValueError:
         pass
@@ -8331,7 +7822,7 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transition check (ADVICE r15): accepted, it would silently cast
     # long→int over the wide file at every read
     try:
-        _snap_commit_schema_wide(table, base + wide1, 3, schema_v0)
+        _snap_check_schema_wide(table, 3, schema_v0)
         raise RuntimeError("metadata-only narrowing commit was accepted")
     except ValueError:
         pass
@@ -8343,9 +7834,7 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wide_badtype",
     )
     try:
-        _snap_commit_schema_wide(
-            table, base + wide1 + badtype, 3, schema_v1, new_files=badtype
-        )
+        _snap_check_schema_wide(table, 3, schema_v1, badtype)
         raise RuntimeError("double-typed event_id was accepted under int64")
     except ValueError:
         pass
@@ -8353,7 +7842,8 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v3: ADD COLUMN region STRING DEFAULT 'unassigned' (metadata-only),
     # then append explicit regions INCLUDING NULLs
     schema_v2 = schema_v1 + [("region", "string", "unassigned")]
-    _snap_commit_schema_wide(table, base + wide1, 3, schema_v2)
+    _snap_check_schema_wide(table, 3, schema_v2)
+    _snap_commit(table, base + wide1, 3, schema=schema_v2)
     wide2 = _snap_add_files(
         ev.filter(F.col("event_id") % 10 == 9).select(
             (F.col("event_id") + F.lit(3000000000)).alias("event_id"),
@@ -8371,9 +7861,8 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         "wide_delta2",
     )
-    _snap_commit_schema_wide(
-        table, base + wide1 + wide2, 4, schema_v2, new_files=wide2
-    )
+    _snap_check_schema_wide(table, 4, schema_v2, wide2)
+    _snap_commit(table, base + wide1 + wide2, 4, schema=schema_v2)
 
     # v0 time travel serves the ORIGINAL narrow schema
     v0 = _snap_read_schema_wide(spark, table, 0)
@@ -8439,7 +7928,7 @@ def snap_rewrite_bitmap_deletes(
     ADVANCED after this fold's scan (a concurrent delete whose rows
     our staged replacements still contain) raises
     SnapCompactConflict instead of retrying through."""
-    prev_v, doc = _snap_latest_doc(table)
+    prev_v, doc = _snap_manifest(table)
     dvb = {
         f: e
         for f, e in (doc.get("dvb") or {}).items()
@@ -8465,7 +7954,7 @@ def snap_rewrite_bitmap_deletes(
     else:
         replacements, rstats = _snap_add_files(survivor, table, "dvb_fold"), {}
     for _ in range(20):
-        cur_v, cur = _snap_latest_doc(table)
+        cur_v, cur = _snap_manifest(table)
         gone = sorted(set(dirty) - set(cur["files"]))
         if gone:
             raise SnapCompactConflict(
@@ -8486,26 +7975,18 @@ def snap_rewrite_bitmap_deletes(
         kept_dvb = {
             f: e for f, e in cur_dvb.items() if f not in set(dirty)
         }
-        if _snap_commit_cas(
-            table,
-            survivors + replacements,
-            cur_v + 1,
-            stats=kept_stats or None,
-            txn=cur.get("txn"),
-            extra={
-                **{
-                    k: v
-                    for k, v in cur.items()
-                    if k not in ("version", "files", "stats", "txn", "dv", "dvb", "commit_ts")
-                },
-                **({"dvb": kept_dvb} if kept_dvb else {}),
-            },
-        ):
-            return {
-                "rewritten": dirty,
-                "replacements": replacements,
-                "version": cur_v + 1,
-            }
+        carried = _snap_carry(cur)
+        carried.pop("dv", None)
+        carried.update(stats=kept_stats or None, dvb=kept_dvb or None)
+        try:
+            _snap_commit(table, survivors + replacements, cur_v + 1, **carried)
+        except SnapCommitConflict:
+            continue
+        return {
+            "rewritten": dirty,
+            "replacements": replacements,
+            "version": cur_v + 1,
+        }
     raise RuntimeError(
         f"DV rewrite lost 20 consecutive races on {table}"
     )
@@ -8570,7 +8051,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_delete_bitmap(
         spark, table, ev.filter(low & (F.col("event_id") % 3 == 1)), "event_id"
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     dirty = sorted(doc["dvb"])
     clean = sorted(set(files) - set(dirty))
     if not dirty or not clean:
@@ -8581,7 +8062,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec = snap_rewrite_bitmap_deletes(spark, table, stats_cols=["event_id"])
     if sorted(rec["rewritten"]) != dirty:
         raise RuntimeError(f"fold rewrote {rec['rewritten']}, wanted {dirty}")
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     if doc1.get("dvb"):
         raise RuntimeError("fold left dvb entries behind")
     if any(
@@ -8613,7 +8094,7 @@ def table_dv_bitmap_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"second fold was not a no-op: {rec2}")
 
     final = spark.read.parquet(
-        *[os.path.join(ddir, f) for f in _snap_latest_doc(table)[1]["files"]]
+        *[os.path.join(ddir, f) for f in _snap_manifest(table)[1]["files"]]
     )
     return (
         final.groupBy("event_type")
@@ -8707,7 +8188,7 @@ def table_dv_bitmap_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     if errs:
         raise RuntimeError(f"concurrent bitmap delete failed: {errs[0]}")
 
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_manifest(table)
     if v != 2:
         raise RuntimeError(f"expected exactly two successor commits, at v{v}")
     if sorted(doc["files"]) != sorted(files) or any(
@@ -8751,8 +8232,6 @@ def _snap_ts_log_read(table: str) -> dict[int, int | None]:
     lines win (concurrent self-heal appends may duplicate a version —
     manifests are immutable, so duplicates agree). Missing file →
     empty dict (legacy table; callers self-heal)."""
-    import json
-
     out: dict[int, int | None] = {}
     try:
         with open(_snap_ts_log_path(table)) as f:
@@ -8769,8 +8248,6 @@ def _snap_ts_log_read(table: str) -> dict[int, int | None]:
 
 
 def _snap_ts_log_append(table: str, entries: list[tuple[int, int | None]]) -> None:
-    import json
-
     if not entries:
         return
     with open(_snap_ts_log_path(table), "a") as f:
@@ -8788,8 +8265,6 @@ def _snap_ts_log_covering(table: str) -> dict[int, int | None]:
     catch-up line appended, so the NEXT resolution is back to one
     log read. Expired versions lingering in the log are filtered
     against the committed set (a directory listing, zero opens)."""
-    import json
-
     committed = _snap_versions(table)
     log = _snap_ts_log_read(table)
     covered = max(log) if log else -1
@@ -8797,10 +8272,7 @@ def _snap_ts_log_covering(table: str) -> dict[int, int | None]:
     if missing:
         catch_up = []
         for v in missing:
-            doc = json.loads(
-                open(os.path.join(table, "manifests", committed[v])).read()
-            )
-            cts = doc.get("commit_ts")
+            cts = _snap_manifest(table, v)[1].get("commit_ts")
             catch_up.append((v, None if cts is None else int(cts)))
         _snap_ts_log_append(table, catch_up)
         log.update(dict(catch_up))
@@ -8861,7 +8333,7 @@ def snap_commit_ts_append(
             cts for cts in _snap_ts_log_covering(table).values() if cts is not None
         ]
         max_stamped = max(stamped) if stamped else None
-        v, doc = _snap_latest_doc(table)
+        v, doc = _snap_manifest(table)
         prev_ts = doc.get("commit_ts")
         if prev_ts is not None and int(ts) <= int(prev_ts):
             raise ValueError(
@@ -8872,25 +8344,17 @@ def snap_commit_ts_append(
                 f"commit_ts {ts} is not after the latest stamped "
                 f"commit_ts {max_stamped}"
             )
-        if _snap_commit_cas(
-            table,
-            doc["files"] + new_files,
-            v + 1,
-            stats=doc.get("stats"),
-            txn=doc.get("txn"),
-            dv=doc.get("dv"),
-            extra={
-                **{
-                    k: val
-                    for k, val in doc.items()
-                    if k
-                    not in ("version", "files", "stats", "txn", "dv", "commit_ts")
-                },
-                "commit_ts": int(ts),
-            },
-        ):
-            _snap_ts_log_append(table, [(v + 1, int(ts))])
-            return v + 1
+        try:
+            _snap_commit(
+                table,
+                doc["files"] + new_files,
+                v + 1,
+                **{**_snap_carry(doc), "commit_ts": int(ts)},
+            )
+        except SnapCommitConflict:
+            continue
+        _snap_ts_log_append(table, [(v + 1, int(ts))])
+        return v + 1
     raise RuntimeError(
         f"timestamped append lost {max_retries} consecutive races on {table}"
     )
@@ -8936,7 +8400,7 @@ def table_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
 
     f0 = _snap_add_files(ev.filter(F.col("event_id") % 3 == 0), table, "tts0")
-    _snap_commit_cas(table, f0, 0, extra={"commit_ts": 1000})
+    _snap_commit(table, f0, 0, commit_ts=1000)
     f1 = _snap_add_files(ev.filter(F.col("event_id") % 3 == 1), table, "tts1")
     snap_commit_ts_append(table, f1, 2000)
     f2 = _snap_add_files(ev.filter(F.col("event_id") % 3 == 2), table, "tts2")

@@ -858,155 +858,10 @@ ROUND18_WINDOW = [
     "q_filter_in_between_like",
 ]
 
-ROUND16_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 9 round-15 additions (former deferred_to_round16 pin),
-    # registration order ---
-    "q_table_merge_dv_bitmap",
-    "q_sim_ann_ivf_portable",
-    "q_sim_ann_lsh_portable",
-    "q_sim_ann_pq_portable",
-    "q_sim_ann_ivfpq_portable",
-    "q_table_schema_widening",
-    "q_stream_from_table_cdf_ratelimited",
-    "q_table_dv_bitmap_rewrite",
-    "q_table_time_travel_timestamp",
-    # --- execution-changed re-checks (the q_graph_triangles rule):
-    # the three r15 shared-path dvb guards named by the plan, plus
-    # TWO round-16 execution changes — the DV-aware auto-OPTIMIZE
-    # rewrite of its own key, and q_table_vacuum for snap_expire's
-    # new DV-sidecar sweep branch (each displacing one stamp fill).
-    # Round 16's one-token commit_ts exclusions in the ndv/bloom/
-    # nulls carry spreads are zero-delta in those harnesses (no
-    # commit_ts ever present there); the only harnesses where the
-    # field exists are the time-travel/bitmap keys already in slots
-    # 3-11, so no further displacement ---
-    "q_table_optimize_concurrent",
-    "q_table_merge_dv",
-    "q_table_agg_pushdown",
-    "q_table_auto_optimize",
-    "q_table_vacuum",
-    # --- the 17 remaining oracled round-8-stamp re-checks,
-    # registration order ---
-    "q_text_langid", "q_text_quality", "q_text_tfidf", "q_emb_centroid",
-    "q_text_fingerprint", "q_text_entropy", "q_emb_quantize",
-    "q_pack_sequences", "q_text_collocations", "q_graph_jaccard_neighbors",
-    "q_graph_k_core", "q_graph_link_predict", "q_ts_decayed_sum",
-    "q_ts_gapfill_interpolate", "q_er_clusters", "q_text_bm25",
-    "q_emb_knn_classify",
-    # --- the 17 oldest oracled round-9-stamp re-checks, registration
-    # order (q_tpch_q13 onward rolls to the round-17 fill) ---
-    "q_join_inner", "q_join_broadcast", "q_join_outer",
-    "q_join_full_outer", "q_join_semi", "q_join_anti", "q_join_theta",
-    "q_join_asof", "q_join_range", "q_join_cross",
-    "q_join_asof_tolerance", "q_join_nullsafe", "q_tpch_q3",
-    "q_tpch_q4", "q_tpch_q5", "q_tpch_q6", "q_tpch_q10",
-]
 
-# Retired round-15 window, for the record (50/50 green in
-# CORRECTNESS_r15.json):
-ROUND15_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 11 round-14 additions (former deferred_to_round15 pin,
-    # never driver-checked; the 10 oracled ones judge-verified in the
-    # r14 VERDICT, q_table_ann_index_commits converted oracle-exact
-    # this round), registration order ---
-    "q_table_partition_transforms",
-    "q_table_refs",
-    "q_table_metadata_tables",
-    "q_table_auto_optimize",
-    "q_table_agg_pushdown_dv",
-    "q_stream_table_maintenance",
-    "q_stream_table_epoch_tags",
-    "q_sim_topk_filtered",
-    "q_emb_pca_power_portable",
-    "q_table_ann_index_commits",
-    "q_cluster_kmeans_portable",
-    # --- the 9 remaining oracled round-7-stamp re-checks,
-    # registration order ---
-    "q_ts_changepoint", "q_ts_seasonal_profile", "q_ts_autocorr",
-    "q_window_slope", "q_window_median", "q_ts_outlier_mad",
-    "q_geo_radius_join", "q_geo_grid_density", "q_er_blocked_pairs",
-    # --- the 28 oldest oracled round-8-stamp re-checks, registration
-    # order (q_multimodal_phash is round-8-stamped but rows-only by
-    # design — skipped under the all-oracled discipline; the
-    # remaining 17 round-8 stamps head the round-16 fill) ---
-    "q_agg_minmax_by", "q_sql_window_clause", "q_mv_incremental",
-    "q_time_buckets", "q_agg_salted", "q_agg_mode_bool",
-    "q_agg_grouping_flags", "q_agg_product", "q_dq_profile",
-    "q_stream_topk", "q_sample_weighted", "q_crossval_folds",
-    "q_vocab_prune", "q_dedup_url", "q_fn_string", "q_fn_datetime",
-    "q_fn_math", "q_fn_array", "q_json_parse", "q_fn_map",
-    "q_json_malformed", "q_fn_array2", "q_fn_datetime2",
-    "q_fn_string2", "q_dedup_exact", "q_sim_topk", "q_text_stats",
-    "q_text_tokens",
-]
-
-# Retired round-14 window, for the record (50/50 green in
-# CORRECTNESS_r14.json):
-ROUND14_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 24 round-13 additions (former deferred_to_round14 pin,
-    # never driver-checked; judge-verified oracle-exact in the r13
-    # VERDICT), plan order ---
-    "q_table_partition_pruning",
-    "q_table_optimize_concurrent",
-    "q_table_merge_dv",
-    "q_table_snapshot_diff",
-    "q_table_wap_publish",
-    "q_table_restore",
-    "q_table_two_level_pruning",
-    "q_table_mv_from_cdf",
-    "q_stream_table_schema_evolution",
-    "q_stream_table_partition_ingest",
-    "q_stream_table_cdc_dv",
-    "q_table_analyze_ndv",
-    "q_table_bloom_skip",
-    "q_table_optimize_zorder",
-    "q_stream_from_table_cdf",
-    "q_table_history",
-    "q_corpus_curation_commits",
-    "q_table_column_mapping",
-    "q_table_manifest_list",
-    "q_table_agg_pushdown",
-    "q_table_incremental_read",
-    "q_stream_table_replicate",
-    "q_table_constraint_commit",
-    "q_table_null_pruning",
-    # --- execution-changed-this-round re-checks (the
-    # q_graph_triangles rule), each displacing one unchanged round-7
-    # fill: the snapshot ingest sink's commit upgraded from os.replace
-    # to CAS-with-retry (planned at the r13 freeze); snap_expire
-    # gained ref-head retention counting (r14 named refs); and
-    # snap_append_optimistic now carries ALL manifest keys (ndv,
-    # bloom, nulls) forward, changing every append-path key —
-    # q_table_concurrent_commit is its oldest-stamped representative
-    # not already in this window ---
-    "q_stream_table_ingest",
-    "q_table_vacuum",
-    "q_table_concurrent_commit",
-    # --- the 21 oldest oracled round-7-stamp re-checks, registration
-    # order (head: q_event_transitions + q_observe_metrics, displaced
-    # from the round-13 window; q_ts_changepoint onward roll to
-    # round 15) ---
-    "q_event_transitions", "q_observe_metrics", "q_merge_with_deletes",
-    "q_anonymize_kanon", "q_agg_percentile_disc", "q_agg_regression",
-    "q_agg_weighted_median", "q_agg_corr_matrix", "q_agg_skewkurt",
-    "q_stream_stream_right_join", "q_stream_stateful_profile",
-    "q_stream_dq_drift", "q_fn_string_distance", "q_fn_aes",
-    "q_dedup_jaccard_prefix", "q_text_winnowing", "q_text_readability",
-    "q_graph_degree", "q_copurchase_pairs", "q_rfm_segments",
-    "q_seq_pattern",
-]
-
-# Retired round-13 window, for the record (50/50 green in
-# CORRECTNESS_r13.json):
+# Retired round-13 window (50/50 green in CORRECTNESS_r13.json), kept
+# because tests/test_oracle_types.py pins its oracle types; the other
+# retired windows live in git history:
 ROUND13_WINDOW = [
     # Canaries (2): flagship + the HUGEINT-class sentinel.
     "q_daily_rollup",
@@ -1048,326 +903,6 @@ ROUND13_WINDOW = [
     # q_observe_metrics, roll to round 14) ---
     "q_stream_table_ingest",
     "q_stream_hll_daily",
-]
-
-# Retired round-12 window, for the record (50/50 green in
-# CORRECTNESS_r12.json — 49 hash + 1 rows-only q_cluster_incremental):
-ROUND12_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 6 round-11 additions (former deferred_to_round12 pin),
-    # registration order. q_cluster_incremental is rows-only by design
-    # (file-layout op; rewrite-amplification + idempotence pinned in
-    # tests/test_storage.py::test_cluster_incremental_invariants) ---
-    "q_cluster_incremental",
-    "q_table_snapshot_read",
-    "q_stream_rate_source",
-    "q_stream_table_ingest",
-    "q_agg_quantile_sampled",
-    "q_dedup_minhash_portable",
-    # --- the 26 remaining oracled round-4-stamp re-checks,
-    # registration order (head: q_anomaly_zscore + the 7 displaced by
-    # the round-11 graph swap) ---
-    "q_anomaly_zscore", "q_fn_posexplode", "q_dedup_spans_global",
-    "q_tokenize_vocab", "q_agg_grouping_sets", "q_join_lateral",
-    "q_merge_upsert", "q_fn_map2", "q_fn_array3",
-    "q_data_mix_weighted", "q_join_interval_overlap",
-    "q_sessionize_dynamic", "q_join_salted", "q_cte_recursive",
-    "q_fn_variant", "q_source_python", "q_stream_source_python",
-    "q_ts_similarity", "q_ts_resample", "q_scd2_from_cdc",
-    "q_stream_static_join", "q_stream_append_watermark",
-    "q_daily_rollup_substring", "q_fn_try", "q_dedup_ngram_jaccard",
-    "q_sim_threshold_pairs",
-    # --- the 15 oldest oracled round-5-stamp re-checks, registration
-    # order (the remaining 25 round-5 stamps, head
-    # q_stream_dedup_within_watermark, roll to round 13) ---
-    "q_join_asof_forward", "q_sql_parameterized", "q_sql_modern",
-    "q_udtf_analyze", "q_udf_sql_body", "q_scan_file_metadata",
-    "q_stream_sink_python", "q_yoy_revenue",
-    "q_attribution_last_touch", "q_gaps_islands",
-    "q_attribution_first_touch", "q_stream_cdc_scd2",
-    "q_stream_stream_left_join", "q_stream_stream_full_join",
-    "q_stream_chained_aggs",
-    # --- execution-changed-this-round re-check (auto-mode POI-count
-    # caching; broadcast/grid answer identity re-pinned) ---
-    "q_geo_nearest_poi",
-]
-
-# Retired round-11 window, for the record (50/50 green in
-# CORRECTNESS_r11.json — 49 hash + 1 rows-only q_multimodal_resize):
-ROUND11_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 12 round-10 additions (former deferred_to_round11 pin),
-    # registration order. q_multimodal_resize is rows-only by design
-    # (re-encoded synthetic-codec payload bytes; header/checksum
-    # invariants pinned in tests/test_multimodal.py) ---
-    "q_merge_deletion_vector",
-    "q_stream_mv_backfill",
-    "q_stream_weighted_sample",
-    "q_multimodal_resize",  # rows-only by design
-    "q_agg_hll_portable",
-    "q_agg_cms_portable",
-    "q_text_chunk",
-    "q_graph_ppr",
-    "q_graph_scc_condensation",
-    "q_graph_harmonic",
-    "q_retrieval_chunked",
-    "q_retrieval_eval",
-    # --- the 15 oracled round-3-stamp re-checks left after round 10,
-    # registration order (q_sessionize first — displaced from the
-    # round-10 window by the q_graph_triangles swap) ---
-    "q_sessionize", "q_retention_cohorts", "q_funnel", "q_histogram",
-    "q_dq_checks", "q_train_test_split", "q_sample_stratified",
-    "q_data_mix", "q_text_pii_scrub", "q_stream_tumbling_daily",
-    "q_window_sliding", "q_session_window", "q_stream_dedup",
-    "q_stream_stream_join", "q_stream_flagship_replay",
-    # --- 13 oldest oracled round-4-stamp re-checks, registration
-    # order (of the 39 whose latest driver row is CORRECTNESS_r04; the
-    # next 7 — q_fn_posexplode, q_dedup_spans_global, q_tokenize_vocab,
-    # q_agg_grouping_sets, q_join_lateral, q_merge_upsert, q_fn_map2 —
-    # rolled to round 12 to make room for the implementation-changed
-    # graph keys below, the q_graph_triangles rule) ---
-    "q_set_except", "q_set_intersect_all", "q_set_except_all",
-    "q_sort_nulls", "q_sql_group_by_all", "q_pandas_api",
-    "q_udf_applyinarrow", "q_scan_xml", "q_corpus_pipeline",
-    "q_decontaminate", "q_quality_repetition", "q_window_rolling_time",
-    "q_window_ntile",
-    # --- implementation-changed-this-round re-checks (round-11 code:
-    # iter_vector_join in every O(V)-vector loop, Pregel frontier-delta
-    # rounds in BFS/SSSP/WCC, butterfly part-branch wedge staging,
-    # nearest-POI strategy switch) — a key whose execution changed
-    # after its last green row needs a fresh driver row; registration
-    # order. q_anomaly_zscore rolls to round 12 to make room. ---
-    "q_graph_pagerank", "q_graph_bfs", "q_graph_wcc",
-    "q_graph_label_propagation", "q_graph_sssp", "q_graph_butterfly",
-    "q_graph_scc", "q_geo_nearest_poi",
-]
-
-# Retired round-10 window, for the record (50/50 green in
-# CORRECTNESS_r10.json — 49 hash + 1 rows-only q_stream_ann_index):
-ROUND10_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 10 round-9 additions (former deferred_to_round10 pin),
-    # registration order ---
-    "q_decontaminate_fuzzy",
-    "q_stream_mv_time_travel",
-    "q_stream_decon_guard",
-    "q_stream_ann_index",  # rows-only by design (LSM run-file layout)
-    "q_graph_k_truss",
-    "q_graph_butterfly",
-    "q_graph_scc",
-    "q_graph_anf",
-    "q_dedup_keep_best",
-    "q_retrieval_mmr",
-    # --- the 12 rolled round-2-stamp keys, registration order ---
-    "q_window_percent_rank", "q_topk_with_ties",
-    "q_scan_parquet", "q_scan_json",
-    "q_project_cast", "q_filter_basic", "q_filter_in_between_like",
-    "q_case_when", "q_sort_multi", "q_topk_global",
-    "q_set_union", "q_set_intersect",
-    # --- the 3 oracled round-1-stamp stragglers ---
-    "q_fn_bitwise", "q_text_token_regex", "q_text_langid_ngram",
-    # --- 23 oldest oracled round-3-stamp re-checks, registration
-    # order ---
-    "q_subquery_scalar", "q_subquery_in_correlated", "q_cte",
-    "q_fn_null", "q_fn_struct", "q_text_levenshtein",
-    "q_subquery_not_exists",
-    "q_udf_scalar", "q_udf_pandas", "q_udaf_grouped",
-    "q_udf_sql_registered", "q_udf_arrow", "q_udtf_python",
-    "q_udf_mapinarrow",
-    "q_scan_csv", "q_scan_orc", "q_scan_partitioned",
-    "q_join_bucketed", "q_pivot", "q_unpivot",
-    "q_sample_hash", "q_dedup_latest_per_key",
-    # --- implementation-changed-this-round re-check (the round-3
-    # lesson: a key whose execution changed after its green row needs
-    # a fresh driver row — triangle enumeration switched to the
-    # degree-ordered orientation in round 10; q_sessionize rolls to
-    # round 11 to make room) ---
-    "q_graph_triangles",
-]
-
-# Retired round-9 window, for the record (50/50 green in
-# CORRECTNESS_r09.json — 49 hash + 1 rows-only):
-ROUND9_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 6 round-8 additions (former deferred_to_round9 pin),
-    # registration order ---
-    "q_knn_graph_selective",
-    "q_emb_pca_topk",
-    "q_text_extract_html",
-    "q_retrieval_hybrid_rrf",
-    "q_stream_mv_maintenance",
-    "q_graph_cc_stars",
-    # --- the scheduled 5-key backlog tail ---
-    "q_agg_stats", "q_agg_percentile",
-    "q_fn_explode", "q_fn_explode_outer",
-    "q_dedup_containment",
-    # --- 37 oldest-green re-checks (round-2 stamps, registration
-    # order) ---
-    "q_join_inner", "q_join_broadcast", "q_join_outer",
-    "q_join_full_outer", "q_join_semi", "q_join_anti", "q_join_theta",
-    "q_join_asof", "q_join_range", "q_join_cross",
-    "q_join_asof_tolerance", "q_join_nullsafe",
-    "q_tpch_q3", "q_tpch_q4", "q_tpch_q5", "q_tpch_q6", "q_tpch_q10",
-    "q_tpch_q13", "q_tpch_q14", "q_tpch_q16", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q22", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
-    "q_tpch_q11", "q_tpch_q15", "q_tpch_q17", "q_tpch_q2",
-    "q_tpch_q20", "q_tpch_q21",
-    "q_window_rank", "q_window_lag_lead", "q_window_running",
-    "q_window_range", "q_topk_per_group",
-]
-
-# Retired round-8 window, for the record (50/50 green in
-# CORRECTNESS_r08.json — 49 hash + 1 rows-only):
-ROUND8_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 20 never-driver-checked keys (registration order within
-    # each source round: the round-5 overflow key, the 18 round-6
-    # additions, then the round-6 snapshot's q_graph_sssp) ---
-    "q_er_clusters",
-    "q_sample_weighted", "q_crossval_folds", "q_vocab_prune",
-    "q_ts_decayed_sum", "q_ts_gapfill_interpolate",
-    "q_graph_jaccard_neighbors", "q_graph_label_propagation",
-    "q_graph_k_core", "q_graph_link_predict",
-    "q_text_bm25",
-    "q_dq_profile", "q_sql_window_clause",
-    "q_dedup_url", "q_emb_knn_classify",
-    "q_multimodal_phash",
-    "q_mv_incremental", "q_text_collocations", "q_stream_topk",
-    "q_graph_sssp",
-    # --- 28 oldest-green re-checks (round-1 stamps, priority order
-    # from the pinned backlog above) ---
-    "q_time_buckets", "q_fn_string", "q_fn_datetime", "q_fn_math",
-    "q_fn_array", "q_json_parse", "q_fn_map", "q_json_malformed",
-    "q_fn_array2", "q_fn_datetime2", "q_fn_string2",
-    "q_dedup_exact", "q_sim_topk", "q_text_stats", "q_text_tokens",
-    "q_text_langid", "q_text_quality", "q_text_tfidf",
-    "q_emb_centroid", "q_text_fingerprint", "q_text_entropy",
-    "q_emb_quantize", "q_pack_sequences",
-    "q_agg_grouping_flags", "q_agg_minmax_by", "q_agg_mode_bool",
-    "q_agg_product", "q_agg_salted",
-]
-
-# Retired round-6/7 window, for the record (50/50 green in BOTH
-# CORRECTNESS_r06.json and CORRECTNESS_r07.json — 46 hash + 4
-# rows-only each round; round 7 landed no rotation so the driver
-# re-ran it verbatim):
-ROUND6_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the first 48 deferred_to_round6 keys, registration order ---
-    "q_join_asof_nearest",
-    "q_window_distribution", "q_window_locf",
-    "q_set_union_by_name",
-    "q_sql_quantified", "q_sql_pivot", "q_sql_dynamic",
-    "q_sql_unpivot", "q_sql_lateral_view",
-    "q_scan_text", "q_scan_schema_evolution", "q_scan_csv_malformed",
-    "q_dq_drift",
-    "q_stream_stream_right_join", "q_stream_stateful_profile",
-    "q_stream_dq_drift",
-    "q_agg_percentile_disc", "q_agg_regression",
-    "q_agg_weighted_median", "q_agg_bloom", "q_agg_corr_matrix",
-    "q_agg_skewkurt",
-    "q_fn_string_distance", "q_fn_aes",
-    "q_dedup_jaccard_prefix", "q_emb_pca_power", "q_text_winnowing",
-    "q_cluster_kmeans",
-    "q_event_transitions", "q_observe_metrics",
-    "q_merge_with_deletes", "q_anonymize_kanon", "q_text_readability",
-    "q_graph_wcc", "q_graph_degree",
-    "q_copurchase_pairs", "q_rfm_segments",
-    "q_seq_pattern",
-    "q_ts_changepoint", "q_ts_seasonal_profile", "q_ts_autocorr",
-    "q_window_slope", "q_window_median", "q_ts_outlier_mad",
-    "q_geo_radius_join", "q_geo_grid_density", "q_geo_nearest_poi",
-    "q_er_blocked_pairs",
-]
-
-# Retired round-5 window, for the record (50/50 green in
-# CORRECTNESS_r05.json — 45 hash + 5 rows-only):
-ROUND5_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # --- the 43 post-freeze round-4 keys, registration order ---
-    "q_join_asof_forward",
-    "q_sql_parameterized", "q_sql_modern", "q_udtf_analyze",
-    "q_udf_sql_body",
-    "q_partition_overwrite_dynamic", "q_scan_file_metadata",
-    "q_stream_hll_daily", "q_stream_cdc_scd2",
-    "q_stream_stream_left_join", "q_stream_stream_full_join",
-    "q_stream_chained_aggs", "q_stream_dedup_within_watermark",
-    "q_agg_theta_sketch", "q_agg_bitmap_distinct", "q_agg_cms_sketch",
-    "q_fn_url", "q_fn_csv", "q_fn_xml", "q_fn_collation", "q_fn_mask",
-    "q_dedup_semantic", "q_emb_random_projection", "q_knn_graph",
-    "q_stream_sink_python",
-    "q_yoy_revenue", "q_attribution_last_touch", "q_gaps_islands",
-    "q_attribution_first_touch",
-    "q_chunk_documents", "q_shuffle_deterministic", "q_index_inverted",
-    "q_dedup_incremental", "q_skew_profile", "q_ngram_lm",
-    "q_quality_lm_score", "q_bpe_train", "q_dsir_score", "q_bpe_encode",
-    "q_corpus_select",
-    "q_graph_pagerank", "q_graph_triangles", "q_graph_bfs",
-    # --- 5 oldest-green re-checks (round-1 stamps) ---
-    "q_agg_basic", "q_agg_distinct", "q_agg_rollup", "q_agg_cube",
-    "q_agg_collect",
-]
-
-# Retired round-4 window, for the record (50/50 green in
-# CORRECTNESS_r04.json — 42 hash + 8 rows-only):
-ROUND4_WINDOW = [
-    # Canaries (2): flagship + the HUGEINT-class sentinel.
-    "q_daily_rollup",
-    "q_tpch_q12",
-    # New this round: the reference-exact substring-bucketing flagship.
-    "q_daily_rollup_substring",
-    # Staging-refactor re-checks (4): round 3 moved their shared
-    # shingle-staging onto staging.stage() after their green rows.
-    "q_dedup_ngram_jaccard",
-    "q_dedup_near",
-    "q_dedup_containment",
-    "q_sim_threshold_pairs",
-    # --- the 43 never-driver-checked keys, registration order ---
-    # relational set-op/sort tail (4)
-    "q_set_except", "q_set_intersect_all", "q_set_except_all",
-    "q_sort_nulls",
-    # sql_surface round-3 additions (2)
-    "q_sql_group_by_all", "q_pandas_api",
-    # udfs (1)
-    "q_udf_applyinarrow",
-    # storage (2)
-    "q_scan_xml", "q_zorder_layout",
-    # reshape (1)
-    "q_agg_approx_percentile",
-    # pipeline (1)
-    "q_corpus_pipeline",
-    # streaming_queries (4)
-    "q_datagen", "q_stream_neardup", "q_stream_static_join",
-    "q_stream_append_watermark",
-    # multimodal (1)
-    "q_multimodal_frame_sample",
-    # functions_pack (1)
-    "q_fn_try",
-    # ann (2)
-    "q_sim_ann_pq", "q_sim_ann_ivfpq",
-    # extras (24)
-    "q_decontaminate", "q_quality_repetition", "q_window_rolling_time",
-    "q_window_ntile", "q_anomaly_zscore", "q_fn_posexplode",
-    "q_dedup_spans_global", "q_tokenize_vocab", "q_agg_grouping_sets",
-    "q_join_lateral", "q_merge_upsert", "q_fn_map2", "q_fn_array3",
-    "q_data_mix_weighted", "q_join_interval_overlap",
-    "q_sessionize_dynamic", "q_join_salted", "q_cte_recursive",
-    "q_fn_variant", "q_source_python", "q_stream_source_python",
-    "q_ts_similarity", "q_ts_resample", "q_scd2_from_cdc",
 ]
 
 

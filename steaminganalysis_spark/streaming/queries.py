@@ -1709,25 +1709,27 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
     manifest snapshot table exactly once: (1) the replayed-batch guard
     returns before writing anything; (2) new uuid data files land
     invisible; (3) manifest v{batch+1} = previous committed list + the
-    new files commits via fsync + os.replace; (4) the KVStore batch
+    new files commits via the table's CAS commit; (4) the KVStore batch
     watermark advances LAST — a crash anywhere earlier leaves either
     orphan files (invisible by the manifest contract) or a committed
     manifest whose ``txn`` marker map already carries this batch id,
     so the replay re-advances the watermark WITHOUT committing a
     duplicate successor (the Delta txn appId/version pattern — ADVICE
-    r12: _snap_latest()+1 addressing alone made a commit-then-crash
+    r12: latest-version+1 addressing alone made a commit-then-crash
     replay re-append on top of its own committed result). Module-level
     so the replay/crash pins in tests/test_streaming.py drive it
     directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
     )
     from steaminganalysis_spark.streaming.sinks import KVStore
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from steaminganalysis_spark.operators.storage import _snap_commit_cas
+        from steaminganalysis_spark.operators.storage import (
+            SnapCommitConflict,
+            _snap_commit,
+        )
 
         store = KVStore.instance(store_name)
         if batch_id <= store.last_applied(marker):
@@ -1746,7 +1748,7 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
             # lookup (never v{batch_id}: batch ids restart at 0 on a
             # fresh checkpoint, and a pre-loaded table may hold several
             # committed snapshots before ingestion starts).
-            prev_v, prev_doc = _snap_latest_doc(table)
+            prev_v, prev_doc = _snap_manifest(table)
             prev_txn = prev_doc.get("txn", {})
             if int(prev_txn.get(marker, -1)) >= batch_id:
                 # Crash landed between the manifest commit and the
@@ -1757,16 +1759,19 @@ def snapshot_ingest_sink(table: str, store_name: str, marker: str):
                 new_files = _snap_add_files(
                     batch_df, table, f"ingest_b{batch_id}"
                 )
-            if _snap_commit_cas(
-                table,
-                prev_doc["files"] + new_files,
-                prev_v + 1,
-                stats=prev_doc.get("stats"),
-                txn={**prev_txn, marker: batch_id},
-                dv=prev_doc.get("dv"),
-            ):
-                store.apply_batch(batch_id, [], marker)
-                return
+            try:
+                _snap_commit(
+                    table,
+                    prev_doc["files"] + new_files,
+                    prev_v + 1,
+                    stats=prev_doc.get("stats"),
+                    txn={**prev_txn, marker: batch_id},
+                    dv=prev_doc.get("dv"),
+                )
+            except SnapCommitConflict:
+                continue
+            store.apply_batch(batch_id, [], marker)
+            return
         raise RuntimeError(
             f"ingest sink lost 20 consecutive commit races on {table}"
         )
@@ -1792,7 +1797,7 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``foreachBatch`` (1) appends the batch as new uuid data files —
     invisible until committed, (2) commits manifest
     v{batch+1} = previous committed list + the new files (fsync +
-    os.replace — O(1) regardless of table size, no data rewritten),
+    os.link — O(1) regardless of table size, no data rewritten),
     and (3) advances the KVStore batch watermark. Replayed batch ids
     return before writing anything (exactly-once); a crash between the
     file-append and the manifest commit strands orphan files that the
@@ -1810,7 +1815,6 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iceberg streaming-sink economics. Replay idempotence and
     crash-window behavior pinned in tests/test_streaming.py."""
     import glob
-    import json
     import os
     import shutil
     import time
@@ -1919,8 +1923,8 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
     )
     from steaminganalysis_spark.streaming.sinks import KVStore
 
@@ -1928,7 +1932,7 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
         store = KVStore.instance(store_name)
         if batch_id <= store.last_applied(marker):
             return  # replayed, already-committed batch: exactly-once
-        _pv, _pdoc = _snap_latest_doc(table)
+        _pv, _pdoc = _snap_manifest(table)
         _ptxn = _pdoc.get("txn", {})
         if int(_ptxn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay (ADVICE r12): the manifest txn
@@ -1985,14 +1989,13 @@ def snapshot_cdc_merge_sink(table: str, store_name: str, marker: str):
         untouched = [f for f in prev_files if f not in matched]
         stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
         stats.update(new_stats)
-        if not _snap_commit_cas(
+        _snap_commit(
             table,
             untouched + new_files,
             prev_v + 1,
-            stats,
+            stats=stats,
             txn={**_ptxn, marker: batch_id},
-        ):
-            raise RuntimeError("single-writer CDC merge lost a CAS race")
+        )
         store.apply_batch(batch_id, [], marker)
 
     return sink
@@ -2054,7 +2057,7 @@ def stream_table_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
-        _snap_commit_stats,
+        _snap_commit,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2071,7 +2074,7 @@ def stream_table_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cdc_base",
         ["event_id"],
     )
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
     m = int(ev.agg(F.max("event_id")).first()[0])
     cut1, cut2 = m // 8, m // 4
 
@@ -2171,8 +2174,9 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
     in tests/test_streaming.py drive it directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_check_schema,
+        _snap_commit,
+        _snap_manifest,
     )
     from steaminganalysis_spark.streaming.sinks import KVStore
 
@@ -2180,7 +2184,7 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
         store = KVStore.instance(store_name)
         if batch_id <= store.last_applied(marker):
             return  # replayed, already-committed batch: exactly-once
-        prev_v, prev_doc = _snap_latest_doc(table)
+        prev_v, prev_doc = _snap_manifest(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             # commit-then-crash replay: the table already holds this
@@ -2189,12 +2193,12 @@ def snapshot_ingest_schema_sink(table: str, store_name: str, marker: str):
             return
         schema = [tuple(p) for p in prev_doc["schema"]]
         new_files = _snap_add_files(batch_df, table, f"evoing_b{batch_id}")
-        _snap_commit_schema(  # raises on rogue/conflicting columns
+        _snap_check_schema(table, schema, new_files)  # rogue/conflicting columns
+        _snap_commit(
             table,
             prev_doc["files"] + new_files,
             prev_v + 1,
-            schema,
-            new_files=new_files,
+            schema=schema,
             txn={**prev_txn, marker: batch_id},
         )
         store.apply_batch(batch_id, [], marker)
@@ -2253,8 +2257,9 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     from steaminganalysis_spark.operators.storage import (
         MV_CUTOFF,
         _snap_add_files,
-        _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_check_schema,
+        _snap_commit,
+        _snap_manifest,
         _snap_read_schema,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2278,7 +2283,8 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         table,
         "evo_hist",
     )
-    _snap_commit_schema(table, base, 0, schema_v0, new_files=base)
+    _snap_check_schema(table, schema_v0, base)
+    _snap_commit(table, base, 0, schema=schema_v0)
 
     src = os.path.join(tmp, "src")
     os.makedirs(src)
@@ -2323,7 +2329,7 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # rejection #1 (pre-evolution): a batch already carrying `day` —
     # undeclared column, must fail at commit with nothing visible
-    v_before, doc_before = _snap_latest_doc(table)
+    v_before, doc_before = _snap_manifest(table)
     store = KVStore.instance(store_name)
     wm_before = store.last_applied(marker)
     rogue = ev.filter(F.col("ts") >= mid).limit(10).select(
@@ -2337,18 +2343,17 @@ def stream_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         raise RuntimeError("pre-evolution rogue batch was accepted")
     except ValueError:
         pass
-    v_after, _doc = _snap_latest_doc(table)
+    v_after, _doc = _snap_manifest(table)
     if v_after != v_before or store.last_applied(marker) != wm_before:
         raise RuntimeError("rejected batch moved the table or watermark")
 
     # the evolution: ONE metadata commit adds `day`
     schema_v1 = schema_v0 + [("day", "string")]
-    _snap_commit_schema(
+    _snap_commit(
         table,
         doc_before["files"],
         v_before + 1,
-        schema_v1,
-        new_files=[],
+        schema=schema_v1,
         txn=doc_before.get("txn", {}),
     )
 
@@ -2418,8 +2423,8 @@ def snapshot_ingest_partitioned_sink(
     directly."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_partitioned,
-        _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
     )
     from steaminganalysis_spark.streaming.sinks import KVStore
 
@@ -2427,7 +2432,7 @@ def snapshot_ingest_partitioned_sink(
         store = KVStore.instance(store_name)
         if batch_id <= store.last_applied(marker):
             return  # replayed, already-committed batch: exactly-once
-        prev_v, prev_doc = _snap_latest_doc(table)
+        prev_v, prev_doc = _snap_manifest(table)
         prev_txn = prev_doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             store.apply_batch(batch_id, [], marker)
@@ -2435,12 +2440,12 @@ def snapshot_ingest_partitioned_sink(
         new_files, new_parts = _snap_add_files_partitioned(
             batch_df, table, f"pingest_b{batch_id}", spec
         )
-        _snap_commit_partitioned(
+        _snap_commit(
             table,
             prev_doc["files"] + new_files,
             prev_v + 1,
-            spec,
-            {**prev_doc.get("partitions", {}), **new_parts},
+            spec=list(spec),
+            partitions={**prev_doc.get("partitions", {}), **new_parts},
             txn={**prev_txn, marker: batch_id},
         )
         store.apply_batch(batch_id, [], marker)
@@ -2491,8 +2496,8 @@ def stream_table_partition_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     from steaminganalysis_spark.operators.storage import (
         MV_CUTOFF,
         _snap_add_files_partitioned,
-        _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         snap_read_partition_pruned,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2514,7 +2519,7 @@ def stream_table_partition_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     base, base_parts = _snap_add_files_partitioned(
         ev.filter(F.col("ts") < cut).drop("ts"), table, "pingest_base", spec
     )
-    _snap_commit_partitioned(table, base, 0, spec, base_parts)
+    _snap_commit(table, base, 0, spec=spec, partitions=base_parts)
 
     src = os.path.join(tmp, "src")
     os.makedirs(src)
@@ -2558,7 +2563,7 @@ def stream_table_partition_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         for r in delta.select("day").distinct().collect()
     }
     got, planned, total = snap_read_partition_pruned(spark, table, "day", days)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     parts = doc["partitions"]
     expect = sorted(f for f in doc["files"] if parts[f]["day"] in days)
     if sorted(planned) != expect:
@@ -2611,8 +2616,8 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_add_files_with_stats,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
     )
     from steaminganalysis_spark.streaming.sinks import KVStore
 
@@ -2620,7 +2625,7 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
         store = KVStore.instance(store_name)
         if batch_id <= store.last_applied(marker):
             return  # replayed, already-committed batch: exactly-once
-        prev_v, doc = _snap_latest_doc(table)
+        prev_v, doc = _snap_manifest(table)
         prev_txn = doc.get("txn", {})
         if int(prev_txn.get(marker, -1)) >= batch_id:
             store.apply_batch(batch_id, [], marker)
@@ -2730,15 +2735,14 @@ def snapshot_cdc_dv_sink(table: str, store_name: str, marker: str):
 
         successor_stats = {f: stats[f] for f in untouched if f in stats}
         successor_stats.update(new_stats)
-        if not _snap_commit_cas(
+        _snap_commit(
             table,
             untouched + new_files,
             prev_v + 1,
             stats=successor_stats,
             txn={**prev_txn, marker: batch_id},
             dv=dv_map,
-        ):
-            raise RuntimeError("single-writer CDC-DV merge lost a CAS race")
+        )
         store.apply_batch(batch_id, [], marker)
 
     return sink
@@ -2951,8 +2955,8 @@ def table_cdf_consumer_step(
     by the producer."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_read,
         snap_diff,
     )
@@ -2962,7 +2966,7 @@ def table_cdf_consumer_step(
     store = KVStore.instance(store_name)
     if version <= store.last_applied(marker):
         return "skipped-watermark"
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
+    mv_v, mv_doc = _snap_manifest(mv_table)
     mv_txn = mv_doc.get("txn", {})
     if int(mv_txn.get(marker, -1)) >= version:
         # crash landed between the MV commit and the watermark
@@ -2994,13 +2998,8 @@ def table_cdf_consumer_step(
     files = _snap_add_files(mv1, mv_table, f"cdf_v{version}")
     # CAS, not os.replace: the MV table has exactly one writer (this
     # consumer), so a lost race means a misconfigured second consumer
-    # — fail loudly rather than clobber its commit.
-    if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: version}
-    ):
-        raise RuntimeError(
-            f"MV table {mv_table} has a concurrent writer (CAS lost)"
-        )
+    # — SnapCommitConflict fails loudly rather than clobber its commit.
+    _snap_commit(mv_table, files, mv_v + 1, txn={**mv_txn, marker: version})
     if crash_before_watermark:
         return "applied"  # harness-injected crash: watermark NOT advanced
     store.apply_batch(version, [], marker)
@@ -3062,7 +3061,6 @@ def stream_from_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_commit_cas,
         _snap_read,
         _snap_versions,
     )
@@ -3098,8 +3096,7 @@ def stream_from_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1 = dict(bstats)
     s1.update(ins_stats)
-    if not _snap_commit_cas(src, base + ins, 1, stats=s1):
-        raise RuntimeError("single-writer CDF harness lost a CAS race (v1)")
+    _snap_commit(src, base + ins, 1, stats=s1)
 
     # v2 = COW merge: inside the <= max/4 span, +10 updates and
     # %DIFF_DEL_MOD deletes; only span-matched files rewrite
@@ -3126,8 +3123,7 @@ def stream_from_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched = [f for f in base if f not in matched]
     s2 = {f: s1[f] for f in untouched + ins}
     s2.update(rw_stats)
-    if not _snap_commit_cas(src, untouched + ins + rw, 2, stats=s2):
-        raise RuntimeError("single-writer CDF harness lost a CAS race (v2)")
+    _snap_commit(src, untouched + ins + rw, 2, stats=s2)
 
     # consumer bootstrap: MV v0 materialized from source v0
     marker = f"{KEY_PREFIX}cdf-consumer:{run}"
@@ -3266,8 +3262,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         MERGE_INSERT_OFFSET,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         snap_diff,
         snap_read_mor,
@@ -3303,8 +3298,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1 = dict(bstats)
     s1.update(ins_stats)
-    if not _snap_commit_cas(src, base + ins, 1, stats=s1):
-        raise RuntimeError("single-writer replicate harness lost a CAS race")
+    _snap_commit(src, base + ins, 1, stats=s1)
     cut = int(ev.agg(F.max("event_id")).first()[0]) // 4
     ddir = os.path.join(src, "data")
     # the source v2 merge deletes %DIFF_DEL_MOD keys across the WHOLE
@@ -3325,8 +3319,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s2 = {f: s1[f] for f in ins}
     s2.update(rw_stats)
-    if not _snap_commit_cas(src, ins + rw, 2, stats=s2):
-        raise RuntimeError("single-writer replicate harness lost a CAS race")
+    _snap_commit(src, ins + rw, 2, stats=s2)
 
     # replica bootstrap = source v0 content in its OWN files
     rfiles, rstats = _snap_add_files_with_stats(
@@ -3357,7 +3350,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink(batch, v)
 
     # gate 2: replaying the last version leaves the manifest identical
-    rv, rdoc = _snap_latest_doc(rep)
+    rv, rdoc = _snap_manifest(rep)
     before = json.dumps(rdoc, sort_keys=True)
     diff2 = snap_diff(spark, src, 1, 2, "event_id")
     sink(
@@ -3372,7 +3365,7 @@ def stream_table_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         2,
     )
-    rv2, rdoc2 = _snap_latest_doc(rep)
+    rv2, rdoc2 = _snap_manifest(rep)
     if json.dumps(rdoc2, sort_keys=True) != before:
         raise RuntimeError("replay mutated the replica manifest")
     # gate 3: the scattered deletes took the DV path on the replica
@@ -3444,7 +3437,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from steaminganalysis_spark.operators.storage import (
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         snap_auto_optimize,
     )
@@ -3505,7 +3498,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(5):
         drip(i)
     run_epoch()
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     if len(doc1["files"]) != 5:
         raise RuntimeError(f"epoch 1 landed {len(doc1['files'])} files")
     import pyarrow.parquet as pq
@@ -3519,7 +3512,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if sorted(rec1["selected"]) != doc1["files"] or rec1["n_out"] != 1:
         raise RuntimeError(f"epoch-1 maintenance misfired: {rec1}")
-    _, doc1b = _snap_latest_doc(table)
+    _, doc1b = _snap_manifest(table)
     merged1 = doc1b["files"][0]
     ddir = os.path.join(table, "data")
     meta1 = (
@@ -3531,7 +3524,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(5, 10):
         drip(i)
     run_epoch()
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     new_small = sorted(set(doc2["files"]) - {merged1})
     if len(new_small) != 5:
         raise RuntimeError(f"epoch 2 landed {sorted(doc2['files'])}")
@@ -3551,7 +3544,7 @@ def stream_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if rec3["selected"] or rec3["version"] != rec2["version"]:
         raise RuntimeError(f"maintenance did not converge: {rec3}")
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_manifest(table)
     if len(doc3["files"]) != 2:
         raise RuntimeError(f"expected 2 files, got {len(doc3['files'])}")
 
@@ -3616,7 +3609,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from steaminganalysis_spark.operators.storage import (
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         _snap_versions,
         snap_auto_optimize,
@@ -3675,7 +3668,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         drip(i)
     run_epoch()
     v1 = snap_ref_create(table, "train_v1", "tag")
-    v1_files = set(_snap_latest_doc(table)[1]["files"])
+    v1_files = set(_snap_manifest(table)[1]["files"])
     v1_rows = _snap_read(spark, table, v1).count()
 
     # epoch 2 (%10 in {8,9}), then maintenance replaces EVERY file
@@ -3684,7 +3677,7 @@ def stream_table_epoch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_epoch()
     import pyarrow.parquet as pq
 
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     total = sum(
         pq.ParquetFile(os.path.join(table, "data", f)).metadata.num_rows
         for f in doc["files"]
@@ -3776,24 +3769,20 @@ def table_cdf_backfill_step(
     Scale: a 10k-file backfill into a 100 TB table drains as 10k/N
     bounded batches, each O(max_files) reads + one O(groups) MV
     commit, restartable at file grain with nothing replayed."""
-    import json
     import os
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_versions,
     )
     from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.streaming.sinks import KVStore
 
-    committed = _snap_versions(src_table)
     docs = {
-        v: json.loads(
-            open(os.path.join(src_table, "manifests", committed[v])).read()
-        )
-        for v in sorted(committed)
+        v: _snap_manifest(src_table, v)[1]
+        for v in sorted(_snap_versions(src_table))
     }
     vs = sorted(docs)
     log: list[tuple[int, str]] = []
@@ -3814,7 +3803,7 @@ def table_cdf_backfill_step(
     if not pending:
         return {"arm": "idle", "consumed": [], "offset": offset}
 
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
+    mv_v, mv_doc = _snap_manifest(mv_table)
     mv_txn = mv_doc.get("txn", {})
     # Exactly-once across restarts with a DIFFERENT max_files (r16
     # ADVICE): after a crash-before-watermark the MV's txn marker can
@@ -3862,12 +3851,7 @@ def table_cdf_backfill_step(
         .coalesce(1)
     )
     files = _snap_add_files(mv1, mv_table, f"cdfrl_{new_offset}")
-    if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset}
-    ):
-        raise RuntimeError(
-            f"MV table {mv_table} has a concurrent writer (CAS lost)"
-        )
+    _snap_commit(mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset})
     if crash_before_watermark:
         return {
             "arm": "applied",
@@ -3925,7 +3909,6 @@ def stream_from_table_cdf_ratelimited(
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,
@@ -4076,25 +4059,21 @@ def table_cdf_signed_step(
     Scale: a compaction or MERGE touching 10k files of a 100 TB
     table drains as 10k/N bounded batches, each O(max_files) file
     reads + one O(groups) MV commit, restartable at entry grain."""
-    import json
     import os
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_read,
         _snap_versions,
     )
     from steaminganalysis_spark.registry import to_cents
     from steaminganalysis_spark.streaming.sinks import KVStore
 
-    committed = _snap_versions(src_table)
     docs = {
-        v: json.loads(
-            open(os.path.join(src_table, "manifests", committed[v])).read()
-        )
-        for v in sorted(committed)
+        v: _snap_manifest(src_table, v)[1]
+        for v in sorted(_snap_versions(src_table))
     }
     vs = sorted(docs)
     log: list[tuple[int, str, int]] = []
@@ -4111,7 +4090,7 @@ def table_cdf_signed_step(
     if not pending:
         return {"arm": "idle", "consumed": [], "offset": offset}
 
-    mv_v, mv_doc = _snap_latest_doc(mv_table)
+    mv_v, mv_doc = _snap_manifest(mv_table)
     mv_txn = mv_doc.get("txn", {})
     # clamp the slice at a txn marker ahead of the watermark (r16
     # ADVICE, low — see table_cdf_backfill_step): a restart with a
@@ -4164,12 +4143,7 @@ def table_cdf_signed_step(
         .coalesce(1)
     )
     files = _snap_add_files(mv1, mv_table, f"cdfsg_{new_offset}")
-    if not _snap_commit_cas(
-        mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset}
-    ):
-        raise RuntimeError(
-            f"MV table {mv_table} has a concurrent writer (CAS lost)"
-        )
+    _snap_commit(mv_table, files, mv_v + 1, txn={**mv_txn, marker: new_offset})
     if not crash_before_watermark:
         store.apply_batch(new_offset, [], marker)
     return {
@@ -4231,7 +4205,6 @@ def stream_from_table_rewrite_ratelimited(
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,

@@ -643,7 +643,7 @@ def test_transform_pruned_read_scans_only_planned_files(spark):
     import zlib
 
     from steaminganalysis_spark.operators.storage import (
-        _snap_commit_partitioned,
+        _snap_commit,
         snap_add_files_transform_partitioned,
         snap_read_transform_pruned,
     )
@@ -660,8 +660,13 @@ def test_transform_pruned_read_scans_only_planned_files(spark):
     files, parts = snap_add_files_transform_partitioned(
         df, table, "pt_stage", transforms
     )
-    _snap_commit_partitioned(
-        table, files, 0, list(transforms), parts, transforms=transforms
+    _snap_commit(
+        table,
+        files,
+        0,
+        spec=list(transforms),
+        partitions=parts,
+        transforms=transforms,
     )
 
     scan, planned, total = snap_read_transform_pruned(
@@ -776,7 +781,8 @@ def test_widened_read_groups_scan_disjoint_file_sets(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_schema_wide,
+        _snap_check_schema_wide,
+        _snap_commit,
         _snap_read_schema_wide,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -785,16 +791,17 @@ def test_widened_read_groups_scan_disjoint_file_sets(spark):
     a = _snap_add_files(
         spark.range(100).selectExpr("CAST(id AS INT) AS k"), table, "pw_a"
     )
-    _snap_commit_schema_wide(table, a, 0, [("k", "int32", None)], new_files=a)
-    _snap_commit_schema_wide(table, a, 1, [("k", "int64", None)])
+    _snap_check_schema_wide(table, 0, [("k", "int32", None)], a)
+    _snap_commit(table, a, 0, schema=[("k", "int32", None)])
+    _snap_check_schema_wide(table, 1, [("k", "int64", None)])
+    _snap_commit(table, a, 1, schema=[("k", "int64", None)])
     b = _snap_add_files(
         spark.range(100, 200).selectExpr("CAST(id AS BIGINT) AS k"),
         table,
         "pw_b",
     )
-    _snap_commit_schema_wide(
-        table, a + b, 2, [("k", "int64", None)], new_files=b
-    )
+    _snap_check_schema_wide(table, 2, [("k", "int64", None)], b)
+    _snap_commit(table, a + b, 2, schema=[("k", "int64", None)])
     df = _snap_read_schema_wide(spark, table)
     got = sorted(os.path.basename(p) for p in df.inputFiles())
     assert got == sorted(a + b)

@@ -407,15 +407,16 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
     may leave a visible manifest or temp file. Deterministic in
     outcome (content) though not in winner order — the property the
     protocol guarantees."""
-    import json
     import os
     import threading
 
+    import pytest as _pytest
+
     from steaminganalysis_spark.operators.storage import (
+        SnapCommitConflict,
         _snap_add_files,
         _snap_commit,
-        _snap_commit_cas,
-        _snap_latest,
+        _snap_manifest,
         _snap_read,
         snap_append_optimistic,
     )
@@ -451,7 +452,8 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
 
     # contiguous versions 1..N, one per writer
     assert sorted(results) == list(range(1, n_writers + 1)), results
-    v, files = _snap_latest(table)
+    v, _doc = _snap_manifest(table)
+    files = _doc["files"]
     assert v == n_writers
     # every append present exactly once in the final manifest
     expected = sorted(f0 + [f for fs in file_sets for f in fs])
@@ -461,11 +463,7 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
     # each intermediate manifest is a superset chain (no lost appends)
     prev = set(f0)
     for ver in range(1, n_writers + 1):
-        cur = set(
-            json.loads(
-                open(os.path.join(table, "manifests", f"v{ver}.json")).read()
-            )["files"]
-        )
+        cur = set(_snap_manifest(table, ver)[1]["files"])
         assert prev < cur, ver
         prev = cur
     # no temp files left behind by losers
@@ -474,9 +472,10 @@ def test_cas_commit_thread_race_and_loser_invisibility(spark):
         if f.endswith(".inprogress")
     ]
     assert leftovers == []
-    # direct CAS loser: stale list, same version -> False, no mutation
+    # direct CAS loser: stale list, same version -> raises, no mutation
     before = sorted(os.listdir(os.path.join(table, "manifests")))
-    assert not _snap_commit_cas(table, f0, n_writers)
+    with _pytest.raises(SnapCommitConflict):
+        _snap_commit(table, f0, n_writers)
     assert sorted(os.listdir(os.path.join(table, "manifests"))) == before
 
 
@@ -539,9 +538,10 @@ def test_vacuum_shared_file_safety_and_merge_amplification(spark):
     # files: commit the staged files, then expire with grace 0 — the
     # delete-time re-list sees v2 and keeps them even though the
     # caller's retain list predates it.
-    from steaminganalysis_spark.operators.storage import _snap_latest
+    from steaminganalysis_spark.operators.storage import _snap_manifest
 
-    v1, f1 = _snap_latest(table)
+    v1, _doc = _snap_manifest(table)
+    f1 = _doc["files"]
     _snap_commit(table, f1 + staged, v1 + 1)
     record3 = snap_expire(table, retain=[1], orphan_grace_seconds=0.0)
     assert record3["files_removed"] == []  # staged now referenced by v2
@@ -584,8 +584,8 @@ def test_pruned_read_superset_safety_and_stats_roundtrip(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_add_files_with_stats,
-        _snap_commit_stats,
-        snap_read_pruned,
+        _snap_commit,
+        snap_read_pruned_multi,
     )
     from steaminganalysis_spark.scratch import scratch_dir
 
@@ -600,7 +600,7 @@ def test_pruned_read_superset_safety_and_stats_roundtrip(spark):
         table,
         "pn",
     )
-    _snap_commit_stats(table, files + extra, 0, stats)
+    _snap_commit(table, files + extra, 0, stats=stats)
 
     import os
 
@@ -615,13 +615,101 @@ def test_pruned_read_superset_safety_and_stats_roundtrip(spark):
         assert st["k"] == [lo, hi], (f, st, lo, hi)
 
     for lo, hi in [(0, 0), (249, 250), (999, 999), (100, 900), (2000, 3000)]:
-        frame, planned, total = snap_read_pruned(spark, table, "k", lo, hi)
+        frame, planned, total = snap_read_pruned_multi(spark, table, {"k": (lo, hi)})
         got = sorted(
             r.k for r in frame.filter(F.col("k").between(lo, hi)).collect()
         )
         assert got == list(range(max(lo, 0), min(hi, 999) + 1)), (lo, hi)
         assert set(extra) <= set(planned), "stats-less file was pruned"
         assert total == 5
+
+
+def test_pruned_read_empty_plan_is_empty_frame_with_table_columns(spark):
+    """A stats-pruned read whose range misses EVERY file plans nothing
+    and still returns a frame: empty, with the table's columns — never
+    a schema-inference failure from a parquet read with no paths."""
+    from steaminganalysis_spark.operators.storage import (
+        _snap_add_files_with_stats,
+        _snap_commit,
+        snap_read_pruned_multi,
+    )
+    from steaminganalysis_spark.scratch import scratch_dir
+
+    table = f"{scratch_dir('prunemiss')}/t"
+    df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
+    files, stats = _snap_add_files_with_stats(
+        df.repartitionByRange(2, "k"), table, "pm", ["k"]
+    )
+    _snap_commit(table, files, 0, stats=stats)
+    frame, planned, total = snap_read_pruned_multi(
+        spark, table, {"k": (10_000, 20_000)}
+    )
+    assert planned == [] and total == len(files) == 2
+    assert frame.columns == ["k", "v"]
+    assert frame.count() == 0
+
+
+def _uncommitted_version_calls():
+    """(reader, call with an uncommitted version 7) for every reader
+    that takes a snapshot version."""
+    import steaminganalysis_spark.operators.storage as st
+
+    return {
+        "_snap_read": lambda s, t: st._snap_read(s, t, 7),
+        "_snap_read_schema": lambda s, t: st._snap_read_schema(s, t, 7),
+        "_snap_read_schema_wide": lambda s, t: st._snap_read_schema_wide(s, t, 7),
+        "snap_read_partition_pruned": lambda s, t: st.snap_read_partition_pruned(
+            s, t, "k", {"0"}, version=7
+        ),
+        "snap_read_transform_pruned": lambda s, t: st.snap_read_transform_pruned(
+            s, t, version=7
+        ),
+        "snap_read_mor": lambda s, t: st.snap_read_mor(s, t, "k", version=7),
+        "snap_read_mor_bitmap": lambda s, t: st.snap_read_mor_bitmap(s, t, 7),
+        "snap_read_two_level": lambda s, t: st.snap_read_two_level(
+            s, t, "k", {"0"}, "k", 0, 1, version=7
+        ),
+        "snap_read_pruned_multi": lambda s, t: st.snap_read_pruned_multi(
+            s, t, {"k": (0, 1)}, version=7
+        ),
+        "snap_read_null_pruned": lambda s, t: st.snap_read_null_pruned(
+            s, t, "k", True, version=7
+        ),
+        "snap_read_mapped": lambda s, t: st.snap_read_mapped(s, t, 7),
+        "snap_read_manifest_list": lambda s, t: st.snap_read_manifest_list(
+            s, t, ["0"], version=7
+        ),
+        "snap_metadata_files": lambda s, t: st.snap_metadata_files(s, t, version=7),
+        "snap_metadata_partitions": lambda s, t: st.snap_metadata_partitions(
+            s, t, "k", version=7
+        ),
+        "snap_ndv_estimates": lambda s, t: st.snap_ndv_estimates(t, 7),
+        "snap_agg_pushdown": lambda s, t: st.snap_agg_pushdown(t, ["k"], 7),
+        "snap_agg_pushdown_dv": lambda s, t: st.snap_agg_pushdown_dv(t, ["k"], 7),
+        "snap_agg_pushdown_bitmap": lambda s, t: st.snap_agg_pushdown_bitmap(
+            t, ["k"], 7
+        ),
+        "snap_diff": lambda s, t: st.snap_diff(s, t, 0, 7, "k"),
+        "snap_restore": lambda s, t: st.snap_restore(t, 7),
+    }
+
+
+@pytest.mark.parametrize("reader", sorted(_uncommitted_version_calls()))
+def test_versioned_reader_rejects_uncommitted_version(spark, tmp_path, reader):
+    """Every reader that takes a version resolves it through the one
+    snapshot resolver, so an uncommitted version is a ValueError
+    everywhere — not a KeyError from an inline manifest lookup."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from steaminganalysis_spark.operators.storage import _snap_commit
+
+    table = tmp_path / "t"
+    (table / "data").mkdir(parents=True)
+    pq.write_table(pa.table({"k": [0, 1]}), str(table / "data" / "f0.parquet"))
+    _snap_commit(str(table), ["f0.parquet"], 0)
+    with pytest.raises(ValueError, match="not committed"):
+        _uncommitted_version_calls()[reader](spark, str(table))
 
 
 def test_schema_evolution_commit_validation_and_time_travel(spark):
@@ -641,7 +729,8 @@ def test_schema_evolution_commit_validation_and_time_travel(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_schema,
+        _snap_check_schema,
+        _snap_commit,
         _snap_read_schema,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -653,7 +742,8 @@ def test_schema_evolution_commit_validation_and_time_travel(spark):
         table,
         "e0",
     )
-    _snap_commit_schema(table, f0, 0, v0_schema, new_files=f0)
+    _snap_check_schema(table, v0_schema, f0)
+    _snap_commit(table, f0, 0, schema=v0_schema)
     ddir = os.path.join(table, "data")
     base_meta = (
         os.path.getsize(os.path.join(ddir, f0[0])),
@@ -667,12 +757,12 @@ def test_schema_evolution_commit_validation_and_time_travel(spark):
         "er",
     )
     with _pytest.raises(ValueError, match="extra"):
-        _snap_commit_schema(table, f0 + rogue, 1, v0_schema, new_files=rogue)
+        _snap_check_schema(table, v0_schema, rogue)
     bad = _snap_add_files(
         spark.range(5).selectExpr("id AS k", "CAST(id AS STRING) AS v"), table, "eb"
     )
     with _pytest.raises(ValueError, match="v"):
-        _snap_commit_schema(table, f0 + bad, 1, v0_schema, new_files=bad)
+        _snap_check_schema(table, v0_schema, bad)
     assert not os.path.exists(os.path.join(table, "manifests", "v1.json"))
     assert not [
         f for f in os.listdir(os.path.join(table, "manifests"))
@@ -688,7 +778,8 @@ def test_schema_evolution_commit_validation_and_time_travel(spark):
         table,
         "e1",
     )
-    _snap_commit_schema(table, f0 + f1, 1, v1_schema, new_files=f1)
+    _snap_check_schema(table, v1_schema, f1)
+    _snap_commit(table, f0 + f1, 1, schema=v1_schema)
     assert (
         os.path.getsize(os.path.join(ddir, f0[0])),
         os.path.getmtime(os.path.join(ddir, f0[0])),
@@ -717,7 +808,7 @@ def test_partition_manifest_tuple_roundtrip_and_superset_safety(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_partitioned,
-        _snap_commit_partitioned,
+        _snap_commit,
         snap_read_partition_pruned,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -729,7 +820,7 @@ def test_partition_manifest_tuple_roundtrip_and_superset_safety(spark):
         "CAST(id AS DOUBLE) AS v",
     )
     files, parts = _snap_add_files_partitioned(df, table, "pt", ["bucket"])
-    _snap_commit_partitioned(table, files, 0, ["bucket"], parts)
+    _snap_commit(table, files, 0, spec=["bucket"], partitions=parts)
     assert {p["bucket"] for p in parts.values()} == {"0", "1", "2", "3"}
 
     # (a) round-trip: the re-attached literal equals the derivation
@@ -769,7 +860,7 @@ def test_optimize_concurrent_thread_race(spark):
         SnapCompactConflict,
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_manifest,
         _snap_read,
         snap_append_optimistic,
         snap_compact_optimistic,
@@ -822,7 +913,8 @@ def test_optimize_concurrent_thread_race(spark):
     for t in ts:
         t.join()
     assert not errs, errs
-    v, files = _snap_latest(table)
+    v, _doc = _snap_manifest(table)
+    files = _doc["files"]
     assert v == 6  # v0 + 5 appends + 1 compaction, contiguous
     assert set(files) == set(compacted) | {f for a in appends for f in a}
     got = _snap_read(spark, table)
@@ -837,7 +929,8 @@ def test_optimize_concurrent_thread_race(spark):
     )
     with _pytest.raises(SnapCompactConflict):
         snap_compact_optimistic(table, [base[0]], doomed)
-    v2, files2 = _snap_latest(table)
+    v2, _doc = _snap_manifest(table)
+    files2 = _doc["files"]
     assert v2 == 6 and not set(doomed) & set(files2)
 
 
@@ -853,8 +946,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_append_optimistic,
         snap_delete_optimistic,
         snap_expire,
@@ -906,7 +998,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
         *[_os.path.join(ddir, f) for f in rec2["cow_new_files"]]
     )
     assert rep.filter("event_id % 13 = 0 OR event_id < 25").count() == 0
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     assert all(f not in doc.get("dv", {}) for f in rec2["cow_rewritten"])
     # below 25: 23 base rows still present (0 and 13 were DV-deleted)
     # PLUS the re-inserted 13 in its own file — delete #2 correctly
@@ -921,7 +1013,7 @@ def test_dv_scoping_reinsert_and_rewrite_compaction(spark):
     )
 
     # (c) VACUUM keeps referenced DV files
-    v, _f = _snap_latest(table)
+    v, _f = _snap_manifest(table)
     record = snap_expire(table, retain=[v], orphan_grace_seconds=0.0)
     assert not set(rec["dv_files"]) & set(record["files_removed"])
     assert snap_read_mor(spark, table, "event_id").count() == expect
@@ -997,7 +1089,7 @@ def test_wap_branch_race_and_orphan_invisibility(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_manifest,
         _snap_read,
         snap_branch_commit,
         snap_branch_drop,
@@ -1045,7 +1137,8 @@ def test_wap_branch_race_and_orphan_invisibility(spark):
     for t in ts:
         t.join()
     assert not errs, errs
-    v, files = _snap_latest(table)
+    v, _doc = _snap_manifest(table)
+    files = _doc["files"]
     assert v == 2 and set(files) == set(base + a + b)
     assert _snap_read(spark, table).count() == 180
 
@@ -1078,8 +1171,7 @@ def test_restore_vacuum_interplay_and_txn_carry(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         snap_expire,
         snap_restore,
@@ -1099,11 +1191,11 @@ def test_restore_vacuum_interplay_and_txn_carry(spark):
         "rs_bad",
     )
     # the bad commit carries a streaming sink's txn watermark
-    assert _snap_commit_cas(table, bad, 1, txn={"m": 7})
+    _snap_commit(table, bad, 1, txn={"m": 7})
     v2 = snap_restore(table, 0)
     assert v2 == 2
     # (b) txn carried from latest (v1), not the target (v0 had none)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     assert doc.get("txn", {}).get("m") == 7
     # (a) VACUUM: retain the restore, expire the bad line
     record = snap_expire(table, retain=[0, 2], orphan_grace_seconds=0.0)
@@ -1129,7 +1221,7 @@ def test_two_level_pruning_superset_safety(spark):
     from steaminganalysis_spark.operators.storage import (
         _parquet_file_stats,
         _snap_add_files_partitioned,
-        _snap_commit_partitioned,
+        _snap_commit,
         snap_read_two_level,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -1152,8 +1244,8 @@ def test_two_level_pruning_superset_safety(spark):
     blind_stats = sorted(files)[1]
     parts2 = {f: p for f, p in parts.items() if f != blind_tuple}
     stats2 = {f: s for f, s in stats.items() if s and f != blind_stats}
-    _snap_commit_partitioned(
-        table, files, 0, ["bucket"], parts2, stats=stats2
+    _snap_commit(
+        table, files, 0, spec=["bucket"], partitions=parts2, stats=stats2
     )
     want_bucket = parts[blind_tuple]["bucket"]
     other = {b for b in ("0", "1", "2") if b != want_bucket}
@@ -1261,9 +1353,6 @@ def test_analyze_ndv_merge_exactness_and_metadata_only(spark):
     group present in only ONE file; (3) the Python estimate mirror
     agrees with the Spark SQL estimate expression register-for-
     register on a hand-built state."""
-    import json
-    import os
-
     from steaminganalysis_spark.operators.aggregates import (
         HLLP_M,
         _hllp_estimate_sql,
@@ -1274,8 +1363,8 @@ def test_analyze_ndv_merge_exactness_and_metadata_only(spark):
         _hllp_estimate_py,
         _snap_add_files,
         _snap_commit,
+        _snap_manifest,
         _snap_read,
-        _snap_versions,
         snap_analyze_ndv,
         snap_ndv_estimates,
     )
@@ -1303,9 +1392,7 @@ def test_analyze_ndv_merge_exactness_and_metadata_only(spark):
     _snap_commit(table, f1 + f2, 0)
     v1 = snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
 
-    committed = _snap_versions(table)
-    d0 = json.loads(open(os.path.join(table, "manifests", committed[0])).read())
-    d1 = json.loads(open(os.path.join(table, "manifests", committed[v1])).read())
+    d0, d1 = _snap_manifest(table, 0)[1], _snap_manifest(table, v1)[1]
     assert d1["files"] == d0["files"] and v1 == 1  # metadata-only
     assert set(d1["ndv"]["registers"]) == set(f1 + f2)
 
@@ -1358,8 +1445,6 @@ def test_bloom_skip_mirror_superset_and_absent_probe(spark):
     frame with the table schema (no false negatives, miss = free);
     (4) a file without a recorded bloom is always planned (superset
     safety)."""
-    import json
-    import os
     import zlib
 
     from steaminganalysis_spark.operators.aggregates import (
@@ -1369,8 +1454,9 @@ def test_bloom_skip_mirror_superset_and_absent_probe(spark):
     from steaminganalysis_spark.operators.storage import (
         _bloom_positions_py,
         _snap_add_files,
+        _snap_carry,
         _snap_commit,
-        _snap_versions,
+        _snap_manifest,
         snap_bloom_build,
         snap_read_bloom_pruned,
     )
@@ -1420,13 +1506,10 @@ def test_bloom_skip_mirror_superset_and_absent_probe(spark):
     assert planned == [] and total == 2
     assert empty.count() == 0 and set(empty.columns) == {"doc_id", "text"}
 
-    # strip file 2's bloom from the manifest -> it must always plan
-    committed = _snap_versions(table)
-    mpath = os.path.join(table, "manifests", committed[1])
-    doc = json.loads(open(mpath).read())
+    # strip file 2's bloom in a successor commit -> it must always plan
+    _v, doc = _snap_manifest(table)
     del doc["bloom"]["words"][f2[0]]
-    with open(mpath, "w") as fh:
-        json.dump(doc, fh)
+    _snap_commit(table, doc["files"], 2, **_snap_carry(doc))
     _, planned, _ = snap_read_bloom_pruned(spark, table, "alpha-3")
     assert f2[0] in planned  # bloom-less file conservatively kept
     _, planned, _ = snap_read_bloom_pruned(spark, table, "gamma-nope")
@@ -1455,7 +1538,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
         SnapCompactConflict,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         _snap_versions,
         snap_append_optimistic,
@@ -1502,7 +1585,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
     finally:
         st._snap_add_files_with_stats = real_stage
     assert fired  # the injection actually ran
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_manifest(table)
     assert lv == v and set(fa) <= set(doc["files"])  # append survived
     assert not (set(f0) & set(doc["files"]))  # sources replaced
     assert _snap_read(spark, table).count() == 500  # both visible
@@ -1550,7 +1633,7 @@ def test_optimize_zorder_conflicts_stats_carry_and_tight_spans(spark):
         st._snap_add_files_with_stats = real_stage
     assert fired2
     # nothing from the failed zorder is visible
-    _, doc2 = _snap_latest_doc(table2)
+    _, doc2 = _snap_manifest(table2)
     assert set(doc2["files"]) == (set(f0) - {f0[0]}) | set(rw)
 
 
@@ -1560,13 +1643,9 @@ def test_snap_history_operation_classes_and_footer_rows(spark):
     rewrite) and the footer row counts are exact per version,
     including across a delete commit (rows shrink) and a rewrite
     (files replaced, rows preserved)."""
-    import json
-    import os
-
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
         snap_history,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -1579,13 +1658,7 @@ def test_snap_history_operation_classes_and_footer_rows(spark):
     b = _snap_add_files(df.filter("event_id >= 60").coalesce(1), table, "h1")
     _snap_commit(table, a, 0)                      # create: 60 rows
     _snap_commit(table, a + b, 1)                  # append: 100 rows
-    doc1 = json.loads(
-        open(os.path.join(table, "manifests", "v1.json")).read()
-    )
-    doc1["note"] = "stats refresh"
-    doc1["version"] = 2
-    with open(os.path.join(table, "manifests", "v2.json"), "w") as fh:
-        json.dump(doc1, fh)                        # metadata-only
+    _snap_commit(table, a + b, 2, note="stats refresh")  # metadata-only
     _snap_commit(table, a, 3)                      # delete: b dropped
     c = _snap_add_files(df.filter("event_id < 60").repartition(2), table, "h2")
     _snap_commit(table, c, 4)                      # rewrite: a -> c
@@ -1674,7 +1747,7 @@ def test_column_mapping_rename_cycles_and_id_reuse_safety(spark):
     simply not projected."""
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        snap_commit_mapped,
+        _snap_commit,
         snap_read_mapped,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -1686,7 +1759,7 @@ def test_column_mapping_rename_cycles_and_id_reuse_safety(spark):
     )
     f1 = _snap_add_files(e1.coalesce(1), table, "e1")
     s1 = {"1": "k", "2": "x", "3": "y"}
-    snap_commit_mapped(table, f1, 0, s1, {f: s1 for f in f1})
+    _snap_commit(table, f1, 0, schema=s1, file_schemas={f: s1 for f in f1})
 
     # era 2: SWAP x<->y logically (metadata-only), then append files
     # physically written with the swapped names
@@ -1695,13 +1768,15 @@ def test_column_mapping_rename_cycles_and_id_reuse_safety(spark):
         [(3, 300, 30)], "k long, x long, y long"
     )  # physical x holds what is NOW logically y (field id 2)
     f2 = _snap_add_files(e2.coalesce(1), table, "e2")
-    snap_commit_mapped(
+    _snap_commit(
         table,
         f1 + f2,
         1,
-        s2,
-        {f: {"1": "k", "2": "x", "3": "y"} for f in f2},
-        prev_file_schemas={f: s1 for f in f1},
+        schema=s2,
+        file_schemas={
+            **{f: s1 for f in f1},
+            **{f: {"1": "k", "2": "x", "3": "y"} for f in f2},
+        },
     )
     got = {
         r.k: (r.y, r.x)
@@ -1712,13 +1787,12 @@ def test_column_mapping_rename_cycles_and_id_reuse_safety(spark):
 
     # (3) drop field 3 from the current schema -> not projected
     s3 = {"1": "k", "2": "y"}
-    snap_commit_mapped(
+    _snap_commit(
         table,
         f1 + f2,
         2,
-        s3,
-        {},
-        prev_file_schemas={
+        schema=s3,
+        file_schemas={
             **{f: s1 for f in f1},
             **{f: {"1": "k", "2": "x", "3": "y"} for f in f2},
         },
@@ -1791,12 +1865,11 @@ def test_analyze_ndv_incremental_scans_only_new_files(spark):
     full recompute, and a DIFFERENT group_col triggers a full rescan
     (carried entries keyed by the old grouping are unusable)."""
     import json
-    import os
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_versions,
+        _snap_manifest,
         snap_analyze_ndv,
         snap_append_optimistic,
         snap_ndv_estimates,
@@ -1816,10 +1889,7 @@ def test_analyze_ndv_incremental_scans_only_new_files(spark):
     snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
     est1 = snap_ndv_estimates(table)
 
-    committed = _snap_versions(table)
-    doc1 = json.loads(
-        open(os.path.join(table, "manifests", committed[max(committed)])).read()
-    )
+    _v, doc1 = _snap_manifest(table)
     regs_f1_before = json.dumps(
         doc1["ndv"]["registers"][f1[0]], sort_keys=True
     )
@@ -1835,10 +1905,7 @@ def test_analyze_ndv_incremental_scans_only_new_files(spark):
     snap_append_optimistic(table, f2)
     snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
 
-    committed = _snap_versions(table)
-    doc2 = json.loads(
-        open(os.path.join(table, "manifests", committed[max(committed)])).read()
-    )
+    _v, doc2 = _snap_manifest(table)
     # f1's registers carried forward byte-identically; f2's are new
     assert (
         json.dumps(doc2["ndv"]["registers"][f1[0]], sort_keys=True)
@@ -1852,10 +1919,7 @@ def test_analyze_ndv_incremental_scans_only_new_files(spark):
 
     # different group_col -> carried entries unusable, full rescan
     v = snap_analyze_ndv(spark, table, "event_id", "user_id + 1")
-    committed = _snap_versions(table)
-    doc3 = json.loads(
-        open(os.path.join(table, "manifests", committed[v])).read()
-    )
+    _v, doc3 = _snap_manifest(table, v)
     assert doc3["ndv"]["group_col"] == "event_id"
     assert set(doc3["ndv"]["registers"]) == set(f1 + f2)
 
@@ -1972,7 +2036,7 @@ def test_constraint_commit_edge_bounds_and_null_rejection(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_commit_checked,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2026,7 +2090,7 @@ def test_constraint_commit_edge_bounds_and_null_rejection(spark):
     except SnapConstraintViolation:
         pass
     # (4) version counter untouched by the rejection
-    v4, doc = _snap_latest_doc(table)
+    v4, doc = _snap_manifest(table)
     assert v4 == 2 and not (set(f3) & set(doc["files"]))
 
     # (5) in-bounds stats + NULLs must NOT stats-prove: parquet
@@ -2056,6 +2120,9 @@ def test_null_pruning_not_null_arm_and_superset_safety(spark):
     two arms; (4) IS NULL with zero matching files returns an empty
     typed frame."""
     from steaminganalysis_spark.operators.storage import (
+        _snap_carry,
+        _snap_commit,
+        _snap_manifest,
         snap_commit_with_nulls,
         snap_read_null_pruned,
     )
@@ -2079,15 +2146,11 @@ def test_null_pruning_not_null_arm_and_superset_safety(spark):
     _, planned_notnull, _ = snap_read_null_pruned(spark, table, "value", False)
     assert planned_null == f_null and planned_notnull == f_full  # (1)(3)
 
-    # (2) strip one file's null record -> kept by both arms
-    import json
-    import os
-
-    mpath = os.path.join(table, "manifests", "v1.json")
-    doc = json.loads(open(mpath).read())
+    # (2) strip one file's null record (a successor commit) -> kept
+    # by both arms
+    v, doc = _snap_manifest(table)
     del doc["nulls"][f_full[0]]
-    with open(mpath, "w") as fh:
-        json.dump(doc, fh)
+    _snap_commit(table, doc["files"], v + 1, **_snap_carry(doc))
     _, planned_null2, _ = snap_read_null_pruned(spark, table, "value", True)
     _, planned_notnull2, _ = snap_read_null_pruned(spark, table, "value", False)
     assert f_full[0] in planned_null2 and f_full[0] in planned_notnull2
@@ -2117,7 +2180,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
         SnapCompactConflict,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_delete_optimistic,
         snap_optimize_zorder,
         snap_read_mor,
@@ -2145,7 +2208,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
         [(i,) for i in range(0, 400, 50)], "event_id long"
     )
     rec = snap_delete_optimistic(spark, table, dels, "event_id")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     assert doc.get("dv"), f"harness broke: delete took COW ({rec})"
 
     # (1) refusal without key_col
@@ -2159,7 +2222,7 @@ def test_zorder_dv_table_applies_and_drops_dvs(spark):
     v = snap_optimize_zorder(
         spark, table, "event_id", "user_id", key_col="event_id"
     )
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_manifest(table)
     assert lv == v and not doc.get("dv")
     got = sorted(
         r.event_id
@@ -2212,7 +2275,7 @@ def test_analyze_ndv_key_expr_invalidates_carry(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_analyze_ndv,
         snap_ndv_estimates,
     )
@@ -2227,7 +2290,7 @@ def test_analyze_ndv_key_expr_invalidates_carry(spark):
     f1 = _snap_add_files(df, table, "kx1")
     _snap_commit(table, f1, 0)
     snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     assert doc["ndv"]["key_expr"] == "user_id + 1"
     # same grouping, different key expression -> full recompute
     snap_analyze_ndv(spark, table, "event_type", "event_id * 2")
@@ -2250,7 +2313,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_analyze_ndv,
         snap_append_optimistic,
         snap_bloom_build,
@@ -2276,7 +2339,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
         "mca",
     )
 
-    real_cas = st._snap_commit_cas
+    real_cas = st._snap_commit
     fired = []
 
     def lose_first_cas(tbl, files, version, **kw):
@@ -2285,13 +2348,13 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
             snap_append_optimistic(table, fa)  # takes this version first
         return real_cas(tbl, files, version, **kw)
 
-    st._snap_commit_cas = lose_first_cas
+    st._snap_commit = lose_first_cas
     try:
         v = snap_analyze_ndv(spark, table, "event_type", "user_id + 1")
     finally:
-        st._snap_commit_cas = real_cas
+        st._snap_commit = real_cas
     assert fired
-    lv, doc = _snap_latest_doc(table)
+    lv, doc = _snap_manifest(table)
     # the append survived AND the analyze covers the appended file
     assert lv == v and set(fa) <= set(doc["files"])
     assert set(doc["ndv"]["registers"]) == set(f1 + fa)
@@ -2299,7 +2362,7 @@ def test_metadata_commits_cas_never_clobber_concurrent_append(spark):
     # same discipline for the bloom build (no injection needed to
     # check key preservation: ndv must survive the bloom commit)
     snap_bloom_build(spark, table, "text")
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     assert set(doc2["bloom"]["words"]) == set(f1 + fa)
     assert doc2.get("ndv"), "bloom commit dropped the ndv block"
 
@@ -2437,8 +2500,8 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     )
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_read,
         snap_append_optimistic,
         snap_compact_optimistic,
@@ -2466,7 +2529,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
         )
 
     f0 = _snap_add_files(vecs(0, 60).coalesce(1), corpus_table, "axp0")
-    _snap_commit_cas(corpus_table, f0, 0)
+    _snap_commit(corpus_table, f0, 0)
     cents = train_ivf(spark, _snap_read(spark, corpus_table, 0), k=4, iters=2)
     _centroids_df(spark, cents).write.mode("overwrite").parquet(
         f"{index_dir}/centroids"
@@ -2476,7 +2539,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
         "vec_id", F.col("cid").alias("list_id")
     )
     s0 = _snap_add_files(seed.coalesce(1), index_table, "axps")
-    _snap_commit_cas(index_table, s0, 0, extra={"covers_corpus_version": 0})
+    _snap_commit(index_table, s0, 0, covers_corpus_version=0)
 
     # append, then CRASH mid-update: stage orphan shards, no CAS
     fd = _snap_add_files(vecs(60, 90).coalesce(1), corpus_table, "axpd")
@@ -2484,7 +2547,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     _snap_add_files(  # orphan — a crashed updater's staging
         seed.limit(3), index_table, "axp_orphan"
     )
-    v_ix, doc_ix = _snap_latest_doc(index_table)
+    v_ix, doc_ix = _snap_manifest(index_table)
     assert v_ix == 0 and doc_ix["covers_corpus_version"] == 0  # (1) invisible
 
     rec = snap_ann_index_update(spark, corpus_table, index_table, index_dir)
@@ -2496,7 +2559,7 @@ def test_ann_index_commits_crash_and_rewrite_paths(spark):
     rw = _snap_add_files(
         _snap_read(spark, corpus_table).coalesce(1), corpus_table, "axprw"
     )
-    _, cdoc = _snap_latest_doc(corpus_table)
+    _, cdoc = _snap_manifest(corpus_table)
     snap_compact_optimistic(corpus_table, cdoc["files"], rw)
     rec2 = snap_ann_index_update(spark, corpus_table, index_table, index_dir)
     assert rec2["strategy"] == "diff-fallback"
@@ -2519,7 +2582,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         snap_compact_optimistic,
         snap_delete_optimistic,
@@ -2542,7 +2605,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         spark.createDataFrame([(3,), (7,)], "event_id long"),
         "event_id",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     dv_files = sorted(doc.get("dv", {}))
     assert dv_files  # harness: the delete took the DV path
     clean = [f for f in doc["files"] if f not in doc.get("dv", {})][:2]
@@ -2556,7 +2619,7 @@ def test_compact_carries_metadata_and_refuses_dv_sources(spark):
         "ccs",
     )
     snap_compact_optimistic(table, clean, staged)
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     assert sorted(doc2.get("dv", {})) == dv_files  # dv carried
     survivors = [f for f in doc["files"] if f not in clean]
     assert all(f in doc2.get("stats", {}) for f in survivors)
@@ -2621,7 +2684,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_append_optimistic,
         snap_compact_optimistic,
         snap_delete_bitmap,
@@ -2652,7 +2715,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         ),
         "k",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     dirty = sorted(doc["dvb"])
     clean = sorted(set(doc["files"]) - set(dirty))
     assert dirty and clean
@@ -2672,7 +2735,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
     )
     merged = _snap_add_files(clean_df.coalesce(1), table, "dvbp_merge")
     snap_compact_optimistic(table, clean, merged)
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     assert doc2["dvb"] == doc["dvb"]
 
     # (3) append carries dvb untouched
@@ -2684,7 +2747,7 @@ def test_dvb_lifecycle_compact_refusal_carry_and_append(spark):
         "dvbp_extra",
     )
     snap_append_optimistic(table, extra)
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_manifest(table)
     assert doc3["dvb"] == doc["dvb"]
 
     # (5) MoR bitmap read: original minus deletes plus append
@@ -2713,8 +2776,8 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_add_files_with_stats,
-        _snap_commit_cas,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         snap_append_optimistic,
         snap_commit_ts_append,
         snap_delete_bitmap,
@@ -2733,7 +2796,7 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         "cts_base",
         ["k"],
     )
-    assert _snap_commit_cas(table, files, 0, stats=stats, extra={"commit_ts": 1000})
+    _snap_commit(table, files, 0, stats=stats, commit_ts=1000)
 
     # plain append: new data, NO timestamp — must not inherit ts=1000
     extra = _snap_add_files(
@@ -2744,7 +2807,7 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         "cts_plain",
     )
     snap_append_optimistic(table, extra)
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     assert "commit_ts" not in doc1, doc1.get("commit_ts")
 
     # bitmap delete: ditto
@@ -2756,12 +2819,12 @@ def test_commit_ts_is_commit_scoped_not_carried(spark):
         ),
         "k",
     )
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     assert "commit_ts" not in doc2
 
     # DV fold: ditto
     snap_rewrite_bitmap_deletes(spark, table)
-    _, doc3 = _snap_latest_doc(table)
+    _, doc3 = _snap_manifest(table)
     assert "commit_ts" not in doc3
 
     # AS OF any ts >= 1000 resolves to the v0 timestamped snapshot,
@@ -2803,7 +2866,7 @@ def test_as_of_resolution_reads_one_log_file_steady_state(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_cas,
+        _snap_commit,
         snap_append_optimistic,
         snap_commit_ts_append,
         snap_resolve_as_of,
@@ -2814,7 +2877,7 @@ def test_as_of_resolution_reads_one_log_file_steady_state(spark):
     mk = lambda lo, hi, tag: _snap_add_files(
         spark.range(lo, hi).select(F.col("id").alias("k")), table, tag
     )
-    assert _snap_commit_cas(table, mk(0, 50, "tl0"), 0, extra={"commit_ts": 100})
+    _snap_commit(table, mk(0, 50, "tl0"), 0, commit_ts=100)
     snap_commit_ts_append(table, mk(50, 80, "tl1"), 200)
     snap_append_optimistic(table, mk(80, 90, "tl2"))  # untimestamped
     snap_commit_ts_append(table, mk(90, 95, "tl3"), 300)
@@ -2868,7 +2931,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         _snap_add_files,
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_auto_optimize,
         snap_compact_optimistic,
         snap_delete_bitmap,
@@ -2897,7 +2960,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         ),
         "k",
     )
-    _, doc = _snap_latest_doc(table)
+    _, doc = _snap_manifest(table)
     assert sorted(doc["dvb"]) == sorted(tiny)
     before = sorted(
         r.k for r in snap_read_mor_bitmap(spark, table).select("k").collect()
@@ -2907,7 +2970,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
     # file; the policy must fold+compact, not raise
     rec = snap_auto_optimize(spark, table, small_rows=150, target_rows=10**6)
     assert rec["folded"] == sorted(tiny) and rec["selected"] == sorted(tiny)
-    _, doc1 = _snap_latest_doc(table)
+    _, doc1 = _snap_manifest(table)
     assert not doc1.get("dvb")
     from steaminganalysis_spark.operators.storage import _snap_read
 
@@ -2925,7 +2988,7 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
         spark.range(901, 903).select(F.col("id").alias("k")),
         "k",
     )
-    _, doc2 = _snap_latest_doc(table)
+    _, doc2 = _snap_manifest(table)
     applied = {target[0]: dict(doc2["dvb"][target[0]])}
     staged = _snap_add_files(
         snap_read_mor_bitmap(spark, table)
@@ -2947,15 +3010,9 @@ def test_auto_optimize_dv_crash_shape_converges_and_advance_conflicts(spark):
     table2 = os.path.join(scratch_dir("aodvpin2"), "table")
     t2 = _snap_add_files(rows.filter(F.col("k") >= 990).coalesce(1), table2, "p2")
     _snap_commit(table2, t2, 0)
-    import json as _json
-
-    v, d2 = _snap_latest_doc(table2)
+    v, d2 = _snap_manifest(table2)
     # hand-plant a pair-rows dv entry (the r13 encoding)
-    from steaminganalysis_spark.operators.storage import _snap_commit_cas
-
-    assert _snap_commit_cas(
-        table2, d2["files"], v + 1, extra={"dv": {t2[0]: ["fake_dv.parquet"]}}
-    )
+    _snap_commit(table2, d2["files"], v + 1, dv={t2[0]: ["fake_dv.parquet"]})
     rec2 = snap_auto_optimize(spark, table2, small_rows=150, target_rows=10**6)
     assert rec2["skipped_dv"] == t2 and rec2["selected"] == []
 
@@ -2988,7 +3045,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
     )
     st._snap_commit(table, files, 0, stats=stats)
 
-    orig_cas = st._snap_commit_cas
+    orig_cas = st._snap_commit
     state = {"armed": True}
 
     def racing_cas(t, f, v, **kw):
@@ -3006,7 +3063,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
             )
         return orig_cas(t, f, v, **kw)
 
-    monkeypatch.setattr(st, "_snap_commit_cas", racing_cas)
+    monkeypatch.setattr(st, "_snap_commit", racing_cas)
     rec = st.snap_delete_bitmap(
         spark,
         table,
@@ -3015,9 +3072,9 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
         ),
         "k",
     )
-    monkeypatch.setattr(st, "_snap_commit_cas", orig_cas)
+    monkeypatch.setattr(st, "_snap_commit", orig_cas)
     assert rec["deleted_rows"] == 60  # ours only, relative to winner
-    v, doc = st._snap_latest_doc(table)
+    v, doc = st._snap_manifest(table)
     assert v == 2
     card_sum = sum(e["card"] for e in doc["dvb"].values())
     assert card_sum == 120  # union of both writers, no double count
@@ -3036,7 +3093,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
             # fold DVs then compact EVERYTHING into one file — every
             # original target of the in-flight delete disappears
             st.snap_rewrite_bitmap_deletes(spark, table)
-            _, d = st._snap_latest_doc(table)
+            _, d = st._snap_manifest(table)
             merged = st._snap_add_files(
                 spark.read.parquet(
                     *[os.path.join(table, "data", x) for x in d["files"]]
@@ -3047,7 +3104,7 @@ def test_bitmap_delete_retry_merge_deterministic_and_dead_layout_conflict(spark,
             st.snap_compact_optimistic(table, d["files"], merged)
         return orig_cas(t, f, v, **kw)
 
-    monkeypatch.setattr(st, "_snap_commit_cas", compacting_cas)
+    monkeypatch.setattr(st, "_snap_commit", compacting_cas)
     with _pytest.raises(st.SnapDeleteConflict):
         st.snap_delete_bitmap(
             spark,
@@ -3091,7 +3148,7 @@ def test_dv_fold_commutes_with_append_and_conflicts_on_advance(spark, monkeypatc
         "k",
     )
 
-    orig_cas = st._snap_commit_cas
+    orig_cas = st._snap_commit
     state = {"armed": True}
     appended: list[str] = []
 
@@ -3107,10 +3164,10 @@ def test_dv_fold_commutes_with_append_and_conflicts_on_advance(spark, monkeypatc
             st.snap_append_optimistic(table, extra)
         return orig_cas(t, f, v, **kw)
 
-    monkeypatch.setattr(st, "_snap_commit_cas", racing_cas)
+    monkeypatch.setattr(st, "_snap_commit", racing_cas)
     rec = st.snap_rewrite_bitmap_deletes(spark, table, stats_cols=["k"])
-    monkeypatch.setattr(st, "_snap_commit_cas", orig_cas)
-    _, doc = st._snap_latest_doc(table)
+    monkeypatch.setattr(st, "_snap_commit", orig_cas)
+    _, doc = st._snap_manifest(table)
     assert not doc.get("dvb")
     assert set(appended) <= set(doc["files"])  # winner's append carried
     got = sorted(r.k for r in st._snap_read(spark, table).select("k").collect())
@@ -3141,7 +3198,7 @@ def test_dv_fold_commutes_with_append_and_conflicts_on_advance(spark, monkeypatc
             )
         return orig_cas(t, f, v, **kw)
 
-    monkeypatch.setattr(st, "_snap_commit_cas", advancing_cas)
+    monkeypatch.setattr(st, "_snap_commit", advancing_cas)
     with _pytest.raises(st.SnapCompactConflict, match="advanced"):
         st.snap_rewrite_bitmap_deletes(spark, table)
 

@@ -1947,13 +1947,13 @@ def test_snapshot_ingest_sink_replay_and_crash_windows(spark):
     the file append but BEFORE the manifest commit strands orphan
     files the next read never sees, and the replay commits cleanly
     with the table content correct (no double rows)."""
-    import json
     import os
     import uuid as _uuid
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
+        _snap_manifest,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -1970,12 +1970,12 @@ def test_snapshot_ingest_sink_replay_and_crash_windows(spark):
 
     b0 = spark.range(100, 150).selectExpr("id", "id * 3 AS v")
     sink(b0, 0)
-    manifest = os.path.join(table, "manifests", "v1.json")
-    committed = json.loads(open(manifest).read())["files"]
+    committed = _snap_manifest(table, 1)[1]["files"]
     n_data = len(os.listdir(os.path.join(table, "data")))
     # (a) replay: strict no-op
     sink(b0, 0)
-    assert json.loads(open(manifest).read())["files"] == committed
+    assert _snap_manifest(table) == (1, _snap_manifest(table, 1)[1])
+    assert _snap_manifest(table, 1)[1]["files"] == committed
     assert len(os.listdir(os.path.join(table, "data"))) == n_data
     assert _snap_read(spark, table).count() == 150
 
@@ -2000,13 +2000,13 @@ def test_snapshot_sinks_commit_then_crash_replay(spark):
     faithfully: run the batch to completion, then roll the watermark
     back to the pre-advance value — exactly the state a crash in that
     window leaves behind."""
-    import json
     import os
     import uuid as _uuid
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
+        _snap_manifest,
         _snap_read,
         _snap_versions,
     )
@@ -2035,9 +2035,7 @@ def test_snapshot_sinks_commit_then_crash_replay(spark):
     sink(spark.range(100, 150).selectExpr("id", "id * 3 AS v"), 0)
     sink(spark.range(150, 170).selectExpr("id", "id * 3 AS v"), 1)
     assert store.last_applied(marker) == 1
-    doc = json.loads(
-        open(os.path.join(table, "manifests", "v2.json")).read()
-    )
+    doc = _snap_manifest(table, 2)[1]
     assert doc["txn"][marker] == 1  # batch id rides the commit
     versions = sorted(_snap_versions(table))
     n_data = len(os.listdir(os.path.join(table, "data")))
@@ -2095,7 +2093,7 @@ def test_snapshot_ingest_sink_decoupled_from_batch_ids(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest,
+        _snap_manifest,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2117,16 +2115,17 @@ def test_snapshot_ingest_sink_decoupled_from_batch_ids(spark):
     sink = snapshot_ingest_sink(table, store_name, marker)
     # (b) batch ids resume at 7 (not 0)
     sink(spark.range(30, 45).selectExpr("id", "id AS v"), 7)
-    v, files = _snap_latest(table)
+    v, _doc = _snap_manifest(table)
+    files = _doc["files"]
     assert v == 2  # latest+1, NOT batch_id+1
     assert _snap_read(spark, table).count() == 45
     sink(spark.range(45, 50).selectExpr("id", "id AS v"), 8)
-    v, _ = _snap_latest(table)
+    v, _ = _snap_manifest(table)
     assert v == 3
     assert _snap_read(spark, table).count() == 50
     # replay of the resumed id is still a strict no-op
     sink(spark.range(30, 45).selectExpr("id", "id AS v"), 7)
-    v, _ = _snap_latest(table)
+    v, _ = _snap_manifest(table)
     assert v == 3
     assert _snap_read(spark, table).count() == 50
     KVStore.reset(store_name)
@@ -2149,9 +2148,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
-        _snap_commit_stats,
-        _snap_latest,
-        _snap_latest_with_stats,
+        _snap_commit,
+        _snap_manifest,
         _snap_read,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2171,7 +2169,7 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
         ["event_id"],
     )
     assert len(files) == 4 and len(stats) == 4
-    _snap_commit_stats(table, files, 0, stats)
+    _snap_commit(table, files, 0, stats=stats)
 
     store_name = f"cdc_pin_{run}"
     marker = f"{KEY_PREFIX}cdc-last-applied:{run}"
@@ -2193,7 +2191,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
 
     # (a) batch 0 updates keys 0..49 — inside the FIRST file's span only
     sink(batch(0, 49, 1000.0, 10_000, 5), 0)
-    v1, files1, stats1 = _snap_latest_with_stats(table)
+    v1, _doc = _snap_manifest(table)
+    files1, stats1 = _doc["files"], _doc.get("stats", {})
     assert v1 == 1
     survivors = [f for f in files if f in files1]
     assert len(survivors) == 3, "exactly one span-matched file rewritten"
@@ -2209,7 +2208,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
     # (c) replay: strict no-op
     n_data = len(os.listdir(os.path.join(table, "data")))
     sink(batch(0, 49, 1000.0, 10_000, 5), 0)
-    v_r, files_r = _snap_latest(table)
+    v_r, _doc = _snap_manifest(table)
+    files_r = _doc["files"]
     assert (v_r, sorted(files_r)) == (v1, sorted(files1))
     assert len(os.listdir(os.path.join(table, "data"))) == n_data
 
@@ -2220,7 +2220,8 @@ def test_cdc_merge_sink_replay_pruning_and_stats_carry(spark):
     )
     assert _snap_read(spark, table).count() == 405  # orphans invisible
     sink(b1, 1)  # replay after the crash
-    v2, files2, stats2 = _snap_latest_with_stats(table)
+    v2, _doc = _snap_manifest(table)
+    files2, stats2 = _doc["files"], _doc.get("stats", {})
     assert v2 == 2
     got = _snap_read(spark, table)
     assert got.count() == 408  # 405 + 3 inserts, despite orphans
@@ -2243,8 +2244,9 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
-        _snap_commit_schema,
-        _snap_latest_doc,
+        _snap_check_schema,
+        _snap_commit,
+        _snap_manifest,
         _snap_read_schema,
         _snap_versions,
     )
@@ -2262,7 +2264,8 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
         table,
         "evs_base",
     )
-    _snap_commit_schema(table, base, 0, schema0, new_files=base)
+    _snap_check_schema(table, schema0, base)
+    _snap_commit(table, base, 0, schema=schema0)
     store_name = f"evosink_{run}"
     marker = f"{KEY_PREFIX}evosink-last-applied:{run}"
     sink = snapshot_ingest_schema_sink(table, store_name, marker)
@@ -2284,10 +2287,10 @@ def test_snapshot_schema_sink_rejection_and_crash_replay(spark):
     assert _snap_read_schema(spark, table).count() == 80
 
     # evolution adds `tag`, then (b) a conflicting double `tag`
-    v, doc = _snap_latest_doc(table)
-    _snap_commit_schema(
-        table, doc["files"], v + 1, schema0 + [("tag", "string")],
-        new_files=[], txn=doc.get("txn", {}),
+    v, doc = _snap_manifest(table)
+    _snap_commit(
+        table, doc["files"], v + 1, schema=schema0 + [("tag", "string")],
+        txn=doc.get("txn", {}),
     )
     bad = spark.range(5).selectExpr(
         "id", "CAST(id AS DOUBLE) AS v", "CAST(1.5 AS DOUBLE) AS tag"
@@ -2328,8 +2331,8 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
 
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_partitioned,
-        _snap_commit_partitioned,
-        _snap_latest_doc,
+        _snap_commit,
+        _snap_manifest,
         _snap_versions,
         snap_read_partition_pruned,
     )
@@ -2347,7 +2350,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     files, parts = _snap_add_files_partitioned(
         mk(0, 60), table, "pp_base", ["bucket"]
     )
-    _snap_commit_partitioned(table, files, 0, ["bucket"], parts)
+    _snap_commit(table, files, 0, spec=["bucket"], partitions=parts)
     store_name = f"pingest_pin_{run}"
     marker = f"{KEY_PREFIX}pingest-last-applied:{run}"
     sink = snapshot_ingest_partitioned_sink(
@@ -2357,7 +2360,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
 
     sink(mk(60, 90), 0)
     sink(mk(90, 120), 1)
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     # (a) tuple carry: EVERY file in the latest manifest has a tuple
     assert set(doc["files"]) == set(doc["partitions"])
     got, planned, total = snap_read_partition_pruned(
@@ -2370,7 +2373,7 @@ def test_snapshot_partitioned_sink_replay_and_tuple_carry(spark):
     versions = sorted(_snap_versions(table))
     n_files = len(doc["files"])
     sink(mk(90, 120), 1)
-    _v2, doc2 = _snap_latest_doc(table)
+    _v2, doc2 = _snap_manifest(table)
     assert sorted(_snap_versions(table)) == versions
     assert len(doc2["files"]) == n_files
 
@@ -2396,7 +2399,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         snap_read_mor,
     )
     from steaminganalysis_spark.scratch import scratch_dir
@@ -2442,7 +2445,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
     assert got.count() == 397
     assert got.filter("event_id IN (5, 300, 350)").count() == 0  # (a)
     # (c) the high files holding 300/350 were NOT rewritten
-    _v, doc = _snap_latest_doc(table)
+    _v, doc = _snap_manifest(table)
     untouched_alive = [f for f in files if f in doc["files"]]
     for f in untouched_alive:
         assert (
@@ -2459,7 +2462,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
         "op string, event_id long, event_type string, value double",
     )
     sink(b1, 1)
-    _v2, doc2 = _snap_latest_doc(table)
+    _v2, doc2 = _snap_manifest(table)
     got2 = snap_read_mor(spark, table, "event_id")
     assert got2.count() == 397
     assert got2.filter("event_id = 300").count() == 0  # stayed deleted
@@ -2473,7 +2476,7 @@ def test_cdc_dv_sink_fold_semantics(spark):
 
     before = _json.dumps(doc2, sort_keys=True)
     sink(b1, 1)
-    _v3, doc3 = _snap_latest_doc(table)
+    _v3, doc3 = _snap_manifest(table)
     assert _json.dumps(doc3, sort_keys=True) == before
     KVStore.reset(store_name)
 
@@ -2553,7 +2556,7 @@ def test_ingest_sink_commutes_with_concurrent_compaction(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
         _snap_read,
         snap_compact_optimistic,
     )
@@ -2602,7 +2605,7 @@ def test_ingest_sink_commutes_with_concurrent_compaction(spark):
         st._snap_add_files = real_stage
     assert fired
 
-    v, doc = _snap_latest_doc(table)
+    v, doc = _snap_manifest(table)
     assert v == 2  # compaction v1 + batch v2 — nothing clobbered
     got = _snap_read(spark, table)
     assert got.count() == 102  # both the compacted base and the batch
@@ -2622,7 +2625,7 @@ def test_replicate_out_of_order_version_is_noop(spark):
     from steaminganalysis_spark.operators.storage import (
         _snap_add_files_with_stats,
         _snap_commit,
-        _snap_latest_doc,
+        _snap_manifest,
     )
     from steaminganalysis_spark.scratch import scratch_dir
     from steaminganalysis_spark.streaming.queries import snapshot_cdc_dv_sink
@@ -2645,13 +2648,13 @@ def test_replicate_out_of_order_version_is_noop(spark):
         [("I", 100, "b", 1.0)], "op string, event_id long, event_type string, value double"
     )
     sink(b2, 2)  # newer version applies
-    _, doc = _snap_latest_doc(rep)
+    _, doc = _snap_manifest(rep)
     before = json.dumps(doc, sort_keys=True)
     b1 = spark.createDataFrame(
         [("D", 3, "a", 0.0)], "op string, event_id long, event_type string, value double"
     )
     sink(b1, 1)  # stale version: must be a no-op
-    _, doc2 = _snap_latest_doc(rep)
+    _, doc2 = _snap_manifest(rep)
     assert json.dumps(doc2, sort_keys=True) == before
     KVStore.reset(store_name)
 
@@ -2693,9 +2696,9 @@ def test_cdf_step_restart_with_larger_max_files_clamps_at_marker(spark):
             inc = spark.createDataFrame(
                 [row], "event_id long, event_type string, value double"
             ).coalesce(1)  # exactly ONE file per commit -> a 3-entry log
-            from steaminganalysis_spark.operators.storage import _snap_latest_doc
+            from steaminganalysis_spark.operators.storage import _snap_manifest
 
-            v, doc = _snap_latest_doc(src)
+            v, doc = _snap_manifest(src)
             _snap_commit(
                 src, doc["files"] + _snap_add_files(inc, src, f"c{i+1}"), v + 1
             )
